@@ -1,21 +1,45 @@
-"""Product quantization (PQ): compressed vectors + asymmetric-distance
-search — the memory-side scale path for vector stores.
+"""Quantized ANN: product quantization (PQ) and scalar quantization
+(SQ8) codes, flat or behind coarse IVF cells, searched by one scan.
 
 At 100 TB a float embedding column (64-d float32 = 256 B/row) dwarfs
-executor memory; PQ stores M uint8 codes per vector (here 8 B/row, a
-32× compression) and still answers kNN by table lookup:
+executor memory. PQ stores M uint8 codes per vector (8 B/row, 32×
+compression); SQ8 stores one byte per dimension (4×) with recall that
+does not depend on the corpus shape. IVF variants encode RESIDUALS
+(v − cell centre) and make the scan partition-prunable by cell.
 
-- TRAIN: split each vector into M subvectors, k-means each subspace to
-  256 centroids. Training runs on a driver-side SAMPLE (codebooks are
-  M×256×(D/M) floats — k-means over a bounded sample is the standard
-  recipe; the full data never leaves the cluster).
-- ENCODE: per row, each subvector's nearest-centroid id. Distributed,
-  one Arrow-batched pandas UDF with the codebooks in a broadcast.
-- SEARCH (ADC): per query, precompute an M×256 lookup table of
-  subspace distances, then every candidate's approximate distance is
-  `sum_m LUT[m, code[m]]` — a numpy gather-sum over the codes matrix,
-  no float vectors read at all. Partial top-k per partition, global
-  top-k merge: the same two-stage pattern as every exact kNN here.
+- PQ TRAIN: split each vector into M subvectors, k-means each subspace
+  to 256 centroids on a driver-side SAMPLE (codebooks are M×256×(D/M)
+  floats; the full data never leaves the cluster). ENCODE: per row,
+  each subvector's nearest-centroid id, one Arrow-batched pandas UDF
+  with the codebooks in a broadcast. SQ8 train/encode live in
+  `similarity` (`sq8_train`, `sq8_encode`).
+- SEARCH: every search (`pq_search`, `ivfpq_search`, `ivfsq8_search`
+  and `similarity.sq8_topk`) is argument handling around one skeleton,
+  `_scan_topk`, parameterized by a distance scorer — the hawk-pack
+  shape of a fixed engine over a store's distance:
+  1. collect the query batch (bounded, below);
+  2. route each query to its ``nprobe`` nearest cells (stable sort on
+     the expanded-form distance; a flat index is one cell at the
+     origin that every query is routed to);
+  3. filter the scan to the routed cells (`cell IN (...)`, which
+     becomes PartitionFilters on a cell-partitioned layout, so
+     per-query I/O tracks nprobe);
+  4. per (Arrow batch, cell), score the routed residual queries
+     against the codes with ``score(state, rq, codes[, cnorm]) ->
+     (nq_c, n)`` and keep each query's partial top-k by (dist, vec_id);
+  5. merge globally with `topk_rows`, then optionally re-rank an
+     ``oversample``·k shortlist with exact float L2² distances.
+
+  Scorers: `_adc_scores` (PQ ADC — per-subspace LUT in m matmuls, then
+  an m-gather sum in subspace order; no float vector is read) and
+  `_sq8_scores` (asymmetric SQ8 — the expanded form over the encode-
+  time ``cnorm``, one float32 matmul on the code tile).
+
+Serving-surface bound: every search collects its query batch to the
+driver, bounded by ``max_driver_queries`` (the discipline of
+`ann_search`, hnsw.py). An oversized batch raises a ValueError naming
+the bound instead of risking a driver OOM; bulk batches belong on the
+distributed exact scan (`knn_exact`) or the cogroup HNSW path.
 
 All stages are seeded and deterministic. Recall vs exact kNN is
 asserted in tests on the fixture embeddings.
@@ -27,6 +51,15 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from hawk_pack_spark.functions.distance import distance_expr
+from hawk_pack_spark.operators.materialize import materialize
+from hawk_pack_spark.operators.similarity import (
+    _bounded_query_rows,
+    _list_col_matrix,
+    ivf_build,
+    sq8_encode,
+    sq8_train,
+)
 from hawk_pack_spark.operators.topk import topk_rows
 
 
@@ -118,6 +151,42 @@ def pq_encode(
     )
 
 
+def _residual_cells(
+    vectors: DataFrame,
+    n_clusters: int,
+    id_col: str,
+    vec_col: str,
+    seed: int,
+    kmeans_iter: int,
+    fit_fraction: float | None,
+) -> tuple[DataFrame, list]:
+    """The IVF builds' shared prelude: `ivf_build`'s cells, then each
+    vector's residual ``_resid`` = v − its cell centre, as
+    (vec_id, cell, _resid) materialized once. The codebook/bounds
+    training, the encode and the cell re-join each read it, and each
+    would otherwise re-run the k-means assignment UDF over the corpus
+    (reuse beats recompute; an index build materializes its input
+    exactly once). The frame is CORPUS-sized, so the barrier is the
+    size-gated `materialize`."""
+    assigned, centers = ivf_build(
+        vectors, n_clusters=n_clusters, id_col=id_col, vec_col=vec_col,
+        seed=seed, max_iter=kmeans_iter, fit_fraction=fit_fraction,
+    )
+    centers_df = vectors.sparkSession.createDataFrame(
+        [(i, [float(x) for x in c]) for i, c in enumerate(centers)],
+        "cluster int, _center array<double>",
+    )
+    resid = assigned.join(F.broadcast(centers_df), "cluster").select(
+        F.col(id_col).cast("long").alias("vec_id"),
+        F.col("cluster").cast("int").alias("cell"),
+        F.zip_with(
+            F.col(vec_col).cast("array<double>"), "_center",
+            lambda v, c: v - c,
+        ).alias("_resid"),
+    )
+    return materialize(resid), centers
+
+
 def ivfpq_build(
     vectors: DataFrame,
     n_clusters: int = 64,
@@ -165,35 +234,9 @@ def ivfpq_build(
     ``partitionBy("cell")`` for a pruned on-disk layout; ``centers``
     the coarse centroid list (driver-held routing metadata, same shape
     as `ivf_build`'s); ``codebooks`` the (m, k, d/m) numpy array."""
-    from hawk_pack_spark.operators.materialize import materialize
-    from hawk_pack_spark.operators.similarity import ivf_build
-
-    assigned, centers = ivf_build(
-        vectors, n_clusters=n_clusters, id_col=id_col, vec_col=vec_col,
-        seed=seed, max_iter=kmeans_iter, fit_fraction=fit_fraction,
+    resid, centers = _residual_cells(
+        vectors, n_clusters, id_col, vec_col, seed, kmeans_iter, fit_fraction
     )
-    spark = vectors.sparkSession
-    centers_df = spark.createDataFrame(
-        [(i, [float(x) for x in c]) for i, c in enumerate(centers)],
-        "cluster int, _center array<double>",
-    )
-    resid = assigned.join(F.broadcast(centers_df), "cluster").select(
-        F.col(id_col).cast("long").alias("vec_id"),
-        F.col("cluster").cast("int").alias("cell"),
-        F.zip_with(
-            F.col(vec_col).cast("array<double>"), "_center",
-            lambda v, c: v - c,
-        ).alias("_resid"),
-        # materialize once: pq_train reads this twice (count + sample
-        # collect), pq_encode a third time and the cell re-join a
-        # fourth — each pass otherwise re-runs the k-means assignment
-        # UDF over the corpus (guide §5: reuse beats recompute; an
-        # index build materializes its input exactly once). The
-        # residual frame is CORPUS-sized, so the barrier is the
-        # size-gated dispatch (r13): localCheckpoint at bounded scale,
-        # lineage-keeping DISK_ONLY persist when corpus-sized.
-    )
-    resid = materialize(resid)
     codebooks = pq_train(
         resid, m=m, k=k, vec_col="_resid", sample_size=sample_size,
         seed=seed, iters=pq_iters,
@@ -203,6 +246,177 @@ def ivfpq_build(
         "vec_id", "cell", "codes"
     )
     return encoded, centers, codebooks
+
+
+def _adc_scores(codebooks, rq, codes):
+    """PQ asymmetric distances (nq, n): per subspace i, the LUT
+    ``lut[j, c] = ||rq[j, sub_i] − cb[i, c]||²`` for the whole query
+    block in one matmul, then ``d += lut[:, codes[:, i]]`` in subspace
+    order — one summation order for flat and IVF scans."""
+    m, _, sub = codebooks.shape
+    d = np.zeros((len(rq), len(codes)), dtype=np.float64)
+    for i in range(m):
+        part, cb = rq[:, i * sub : (i + 1) * sub], codebooks[i]
+        lut = (
+            (part * part).sum(1)[:, None]
+            - 2.0 * part @ cb.T
+            + (cb * cb).sum(1)[None, :]
+        )
+        d += lut[:, codes[:, i]]
+    return d
+
+
+def _sq8_scores(bounds, rq, codes, cnorm):
+    """SQ8 asymmetric distances (nq, n) in the expanded form
+    ``||r||² − 2 (r·scale)·c + Σ scale²c²`` with r = rq − lo: the code
+    norm is the encode-time ``cnorm``, so the scan is ONE float32
+    matmul on the uint8 code tile (the scan is approximate; the
+    re-rank is exact float64)."""
+    lo, scale = bounds
+    r = rq - lo[None, :]
+    ws32 = (r * scale[None, :]).astype(np.float32)
+    return (
+        (r * r).sum(1)[:, None]
+        - 2.0 * (ws32 @ codes.astype(np.float32).T).astype(np.float64)
+        + cnorm[None, :]
+    )
+
+
+def _topk_cols(d: np.ndarray, ids: np.ndarray, take: int) -> np.ndarray:
+    """Per row of ``d``, the column indices of the ``take`` smallest
+    (dist, vec_id) — the order `topk_rows` merges in. argpartition
+    alone keeps an arbitrary member of a tie that straddles the cut
+    (duplicate vectors have equal codes), which would make the
+    shortlist depend on how rows are split into partitions."""
+    idx = np.argpartition(d, take - 1, axis=1)[:, :take]
+    cut = np.take_along_axis(d, idx, axis=1).max(1)
+    for j in np.flatnonzero((d <= cut[:, None]).sum(1) > take):
+        pos = np.flatnonzero(d[j] <= cut[j])
+        idx[j] = pos[np.lexsort((ids[pos], d[j, pos]))[:take]]
+    return idx
+
+
+def _scan_topk(
+    encoded: DataFrame,
+    queries: DataFrame,
+    caller: str,
+    score,
+    state,
+    aux: tuple[str, ...],
+    centers: list | None,
+    nprobe: int,
+    kth: int,
+    query_id: str,
+    query_col: str,
+    rerank_with: DataFrame | None,
+    oversample: int,
+    rerank_id_col: str,
+    rerank_vec_col: str,
+    max_driver_queries: int,
+) -> DataFrame:
+    """The quantized-search skeleton (module docstring, steps 1-5).
+    ``score(state, rq, codes, *aux_columns)`` returns the (nq_c, n)
+    distance matrix of one cell's routed residual queries against its
+    codes; ``centers=None`` is a flat index. Returns
+    (query_id, vec_id, dist, rank)."""
+    spark = encoded.sparkSession
+    q_rows = _bounded_query_rows(queries, query_id, query_col, max_driver_queries)
+    if q_rows is None:
+        raise ValueError(
+            f"query batch exceeds max_driver_queries={max_driver_queries}: "
+            f"{caller} collects the query batch driver-side (a serving "
+            "surface). Split the batch, raise max_driver_queries "
+            "explicitly, or use the distributed exact path (knn_exact) "
+            "for bulk batches."
+        )
+    if not q_rows:
+        return spark.createDataFrame(
+            [], "query_id long, vec_id long, dist double, rank int"
+        )
+    qids = np.asarray([r[0] for r in q_rows], dtype=np.int64)
+    qx = np.asarray([r[1] for r in q_rows], dtype=np.float64)
+    if centers is None:  # flat: one cell at the origin
+        centers = np.zeros((1, qx.shape[1]))
+        encoded = encoded.withColumn("cell", F.lit(0))
+    c_mat = np.asarray(centers, dtype=np.float64)
+    cd = (
+        (qx * qx).sum(1, keepdims=True)
+        - 2.0 * qx @ c_mat.T
+        + (c_mat * c_mat).sum(1)[None, :]
+    )
+    npb = min(nprobe, len(c_mat))
+    cell_of = np.argsort(cd, axis=1, kind="stable")[:, :npb].ravel()
+    q_of = np.repeat(np.arange(len(qids)), npb)
+    by_cell = np.argsort(cell_of, kind="stable")  # query order kept per cell
+    cells, starts = np.unique(cell_of[by_cell], return_index=True)
+    routed = dict(zip(cells.tolist(), np.split(q_of[by_cell], starts[1:])))
+    shortlist_k = kth * oversample if rerank_with is not None else kth
+    bc = spark.sparkContext.broadcast((qids, qx, c_mat, routed, shortlist_k, state))
+    scan = encoded.where(F.col("cell").isin(list(routed))).select(
+        F.col("vec_id").cast("long").alias("vec_id"), "cell", "codes", *aux
+    )
+
+    def part(batches):
+        import pyarrow as pa
+
+        qids_, qx_, c_mat_, routed_, kth_, state_ = bc.value
+        for batch in batches:
+            if batch.num_rows == 0:
+                continue
+            ids, cell_ids = (
+                batch.column(c).to_numpy(zero_copy_only=False) for c in ("vec_id", "cell")
+            )
+            cols = [_list_col_matrix(batch.column("codes"), dtype=None)] + [
+                batch.column(c).to_numpy(zero_copy_only=False) for c in aux
+            ]
+            out = []
+            for cell in np.unique(cell_ids):  # every scanned cell is routed
+                rows, q_idx = cell_ids == cell, routed_[int(cell)]
+                rq = qx_[q_idx] - c_mat_[cell][None, :]
+                d = score(state_, rq, *[c[rows] for c in cols])
+                cid = ids[rows]
+                idx = _topk_cols(d, cid, min(kth_, d.shape[1]))
+                out.append((
+                    np.repeat(qids_[q_idx], idx.shape[1]),
+                    cid[idx].ravel(),
+                    np.take_along_axis(d, idx, axis=1).ravel(),
+                ))
+            if out:
+                yield pa.RecordBatch.from_arrays(
+                    [pa.array(np.concatenate(c)) for c in zip(*out)],
+                    names=["query_id", "vec_id", "dist"],
+                )
+
+    partial = scan.mapInArrow(part, "query_id long, vec_id long, dist double")
+    approx = topk_rows(
+        partial, ["query_id"], "dist", shortlist_k, tie_cols=["vec_id"]
+    ).select("query_id", "vec_id", "dist", "rank")
+    if rerank_with is None:
+        return approx
+
+    qdf = F.broadcast(
+        queries.select(
+            F.col(query_id).cast("long").alias("query_id"),
+            F.col(query_col).cast("array<double>").alias("qv"),
+        )
+    )
+    # the shortlist is bounded (|queries|·k·oversample) — broadcast it
+    # so the corpus side never shuffles for the re-rank fetch
+    exact = (
+        F.broadcast(approx.select("query_id", "vec_id"))
+        .join(rerank_with.select(
+            F.col(rerank_id_col).cast("long").alias("vec_id"),
+            F.col(rerank_vec_col).cast("array<double>").alias("v"),
+        ), "vec_id")
+        .join(qdf, "query_id")
+        .select(
+            "query_id", "vec_id",
+            distance_expr("l2_sq", F.col("qv"), F.col("v")).alias("dist"),
+        )
+    )
+    return topk_rows(exact, ["query_id"], "dist", kth, tie_cols=["vec_id"]).select(
+        "query_id", "vec_id", "dist", "rank"
+    )
 
 
 def ivfpq_search(
@@ -220,144 +434,18 @@ def ivfpq_search(
     rerank_vec_col: str = "embedding",
     max_driver_queries: int = 100_000,
 ) -> DataFrame:
-    """ADC top-k over an IVF-PQ index: route each query to its nprobe
-    nearest cells driver-side (numpy over the tiny centroid matrix),
-    JVM-filter the scan to the probed-cell union (PartitionFilters when
-    the codes are cell-partitioned on disk), and gather-sum residual
-    LUTs per (cell, routed-query block) — the LUT absorbs the
-    query-minus-centroid offset, so ADC stays an 8-byte-per-row scan,
-    and the whole block's LUTs build in m small matmuls (no per-query
-    Python loop). Optional exact re-rank on an ``oversample``·k
-    shortlist, same as `pq_search`; ``rerank_id_col``/``rerank_vec_col``
-    name the float table's columns (mirroring `ivfpq_build`'s
-    id_col/vec_col — an index built from custom-named columns re-ranks
-    without renaming). Returns (query_id, vec_id, dist, rank).
-
-    The query collect is BOUNDED (``max_driver_queries``, the same
-    serving-surface discipline as `ann_search`, hnsw.py): a caller
-    feeding a huge query DataFrame gets a clear error instead of a
-    driver OOM — IVF-PQ routing is a serving decision; bulk analytics
-    batches belong on the exact scan or the cogroup HNSW path."""
-    spark = encoded.sparkSession
-    q_rows = (
-        queries.select(
-            F.col(query_id).cast("long"), F.col(query_col).cast("array<double>")
-        )
-        .limit(max_driver_queries + 1)
-        .collect()
-    )
-    if not q_rows:
-        return spark.createDataFrame(
-            [], "query_id long, vec_id long, dist double, rank int"
-        )
-    if len(q_rows) > max_driver_queries:
-        raise ValueError(
-            f"query batch exceeds max_driver_queries={max_driver_queries}: "
-            "ivfpq_search routes queries driver-side (a serving surface). "
-            "Split the batch, raise max_driver_queries explicitly, or use "
-            "the fully-distributed exact path (knn_exact, which never "
-            "collects the query side) for bulk batches — l2_topk_numpy "
-            "also accepts oversized batches and falls back to it."
-        )
-    qids = np.asarray([r[0] for r in q_rows], dtype=np.int64)
-    qx = np.asarray([r[1] for r in q_rows], dtype=np.float64)
-    c_mat = np.asarray(centers, dtype=np.float64)
-    cd = (
-        (qx * qx).sum(1, keepdims=True)
-        - 2.0 * qx @ c_mat.T
-        + (c_mat * c_mat).sum(1)[None, :]
-    )
-    npb = min(nprobe, len(c_mat))
-    order = np.argsort(cd, axis=1, kind="stable")[:, :npb]
-    routed: dict[int, list[int]] = {}
-    for qi in range(len(qids)):
-        for c in order[qi]:
-            routed.setdefault(int(c), []).append(qi)
-    shortlist_k = kth * oversample if rerank_with is not None else kth
-    bc = spark.sparkContext.broadcast(
-        (qids, qx, c_mat, codebooks, routed, shortlist_k)
-    )
-    scan = encoded.where(F.col("cell").isin(list(routed)))
-
-    def part_topk(batches):
-        import pandas as pd
-
-        qids_, qx_, c_mat_, cb, routed_, kth_ = bc.value
-        m_, k_, sub = cb.shape
-        cb_norms = (cb * cb).sum(2)  # (m, k), shared by every cell
-        parts = [pdf for pdf in batches if len(pdf)]
-        if not parts:
-            return
-        whole = pd.concat(parts, ignore_index=True)
-        out = []
-        for cell, pdf in whole.groupby("cell", sort=False):
-            q_idx = routed_.get(int(cell))
-            if not q_idx:
-                continue
-            codes = np.stack(pdf["codes"].to_numpy())  # (n, m)
-            ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            # residual queries for this cell; LUTs for the WHOLE routed
-            # block in m small matmuls (VERDICT r6 #1 — no per-query
-            # Python loop): lut[j, i, :] = ||rq[j, sub_i] - cb[i]||²
-            rq = qx_[q_idx] - c_mat_[int(cell)][None, :]  # (nq_c, d)
-            nq_c = len(q_idx)
-            lut = np.empty((nq_c, m_, k_), dtype=np.float64)
-            for i in range(m_):
-                part = rq[:, i * sub : (i + 1) * sub]  # (nq_c, sub)
-                lut[:, i, :] = (
-                    (part * part).sum(1)[:, None]
-                    - 2.0 * part @ cb[i].T
-                    + cb_norms[i][None, :]
-                )
-            # ADC gather-sum, vectorized over (query, row): m gathers
-            d = np.zeros((nq_c, len(ids)), dtype=np.float64)
-            for i in range(m_):
-                d += lut[:, i, codes[:, i]]
-            take = min(kth_, d.shape[1])
-            idx = np.argpartition(d, take - 1, axis=1)[:, :take]  # (nq_c, take)
-            out.append(
-                pd.DataFrame(
-                    {
-                        "query_id": np.repeat(qids_[q_idx], take),
-                        "vec_id": ids[idx].ravel(),
-                        "dist": np.take_along_axis(d, idx, axis=1).ravel(),
-                    }
-                )
-            )
-        if out:
-            yield pd.concat(out, ignore_index=True)
-
-    partial = scan.mapInPandas(
-        part_topk, "query_id long, vec_id long, dist double"
-    )
-    adc = topk_rows(
-        partial, ["query_id"], "dist", shortlist_k, tie_cols=["vec_id"]
-    ).select("query_id", "vec_id", "dist", "rank")
-    if rerank_with is None:
-        return adc
-
-    from hawk_pack_spark.functions.distance import distance_expr
-
-    qdf = F.broadcast(
-        queries.select(
-            F.col(query_id).cast("long").alias("query_id"),
-            F.col(query_col).cast("array<double>").alias("qv"),
-        )
-    )
-    exact = (
-        adc.select("query_id", "vec_id")
-        .join(rerank_with.select(
-            F.col(rerank_id_col).cast("long").alias("vec_id"),
-            F.col(rerank_vec_col).cast("array<double>").alias("v"),
-        ), "vec_id")
-        .join(qdf, "query_id")
-        .select(
-            "query_id", "vec_id",
-            distance_expr("l2_sq", F.col("qv"), F.col("v")).alias("dist"),
-        )
-    )
-    return topk_rows(exact, ["query_id"], "dist", kth, tie_cols=["vec_id"]).select(
-        "query_id", "vec_id", "dist", "rank"
+    """ADC top-k over an IVF-PQ index (`ivfpq_build`): each query
+    probes its ``nprobe`` nearest cells, and the residual LUT absorbs
+    the query-minus-centroid offset, so ADC stays an 8-byte-per-row
+    scan. Optional exact re-rank on an ``oversample``·k shortlist, as
+    in `pq_search`; ``rerank_id_col``/``rerank_vec_col`` name the float
+    table's columns (mirroring `ivfpq_build`'s id_col/vec_col — an
+    index built from custom-named columns re-ranks without renaming).
+    Returns (query_id, vec_id, dist, rank)."""
+    return _scan_topk(
+        encoded, queries, "ivfpq_search", _adc_scores, codebooks, (),
+        centers, nprobe, kth, query_id, query_col, rerank_with, oversample,
+        rerank_id_col, rerank_vec_col, max_driver_queries,
     )
 
 
@@ -374,11 +462,9 @@ def pq_search(
     rerank_vec_col: str = "embedding",
     max_driver_queries: int = 100_000,
 ) -> DataFrame:
-    """ADC top-k: (query_id, vec_id, dist, rank) with approximate L2²
-    distances. Queries are collected to a broadcast (the standard
-    many-vectors × few-queries shape); the collect is bounded by
-    ``max_driver_queries`` (serving-surface discipline — see
-    `ivfpq_search`); candidates never materialize float vectors.
+    """ADC top-k over flat PQ codes (`pq_encode`'s (vec_id, codes)):
+    (query_id, vec_id, dist, rank) with approximate L2² distances;
+    candidates never materialize float vectors.
 
     ``rerank_with``: the float-vector table (``rerank_id_col``,
     ``rerank_vec_col``). When given, ADC produces an ``oversample``·k
@@ -386,93 +472,10 @@ def pq_search(
     the IVFPQ+re-rank recipe: the full scan stays on 8-byte codes,
     floats are fetched for only O(oversample·k) rows per query via an
     equi-join."""
-    spark = encoded.sparkSession
-    q_rows = (
-        queries.select(
-            F.col(query_id).cast("long"), F.col(query_col).cast("array<double>")
-        )
-        .limit(max_driver_queries + 1)
-        .collect()
-    )
-    if len(q_rows) > max_driver_queries:
-        raise ValueError(
-            f"query batch exceeds max_driver_queries={max_driver_queries}: "
-            "pq_search builds per-query LUT broadcasts (a serving surface). "
-            "Split the batch or raise max_driver_queries explicitly."
-        )
-    cb = codebooks  # (m, k, sub)
-    m, _, sub = cb.shape
-    qids = np.asarray([r[0] for r in q_rows], dtype=np.int64)
-    qx = np.asarray([r[1] for r in q_rows], dtype=np.float64)
-    # LUT[q, m, k]: distance of query-subvector to each centroid
-    lut = np.empty((len(qids), m, cb.shape[1]), dtype=np.float64)
-    for i in range(m):
-        part = qx[:, i * sub : (i + 1) * sub]
-        lut[:, i, :] = (
-            (part * part).sum(1, keepdims=True)
-            - 2.0 * part @ cb[i].T
-            + (cb[i] * cb[i]).sum(1)[None, :]
-        )
-    shortlist_k = kth * oversample if rerank_with is not None else kth
-    bc = spark.sparkContext.broadcast((qids, lut, shortlist_k))
-
-    def part_topk(batches):
-        import pandas as pd
-
-        qids_, lut_, kth_ = bc.value
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            codes = np.stack(pdf["codes"].to_numpy())  # (n, m)
-            ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            # ADC gather-sum: dists[q, n] = Σ_m LUT[q, m, codes[n, m]]
-            out = []
-            for qi in range(len(qids_)):
-                d = lut_[qi, np.arange(codes.shape[1])[None, :], codes].sum(1)
-                take = min(kth_, len(d))
-                idx = np.argpartition(d, take - 1)[:take]
-                out.append(
-                    pd.DataFrame(
-                        {
-                            "query_id": qids_[qi],
-                            "vec_id": ids[idx],
-                            "dist": d[idx],
-                        }
-                    )
-                )
-            yield pd.concat(out, ignore_index=True)
-
-    partial = encoded.mapInPandas(
-        part_topk, "query_id long, vec_id long, dist double"
-    )
-    adc = topk_rows(
-        partial, ["query_id"], "dist", shortlist_k, tie_cols=["vec_id"]
-    ).select("query_id", "vec_id", "dist", "rank")
-    if rerank_with is None:
-        return adc
-
-    from hawk_pack_spark.functions.distance import distance_expr
-
-    qdf = F.broadcast(
-        queries.select(
-            F.col(query_id).cast("long").alias("query_id"),
-            F.col(query_col).cast("array<double>").alias("qv"),
-        )
-    )
-    exact = (
-        adc.select("query_id", "vec_id")
-        .join(rerank_with.select(
-            F.col(rerank_id_col).cast("long").alias("vec_id"),
-            F.col(rerank_vec_col).cast("array<double>").alias("v"),
-        ), "vec_id")
-        .join(qdf, "query_id")
-        .select(
-            "query_id", "vec_id",
-            distance_expr("l2_sq", F.col("qv"), F.col("v")).alias("dist"),
-        )
-    )
-    return topk_rows(exact, ["query_id"], "dist", kth, tie_cols=["vec_id"]).select(
-        "query_id", "vec_id", "dist", "rank"
+    return _scan_topk(
+        encoded, queries, "pq_search", _adc_scores, codebooks, (),
+        None, 1, kth, query_id, query_col, rerank_with, oversample,
+        rerank_id_col, rerank_vec_col, max_driver_queries,
     )
 
 
@@ -505,34 +508,9 @@ def ivfsq8_build(
     ``partitionBy("cell")`` for the pruned on-disk layout; ``cnorm``
     is the query-independent code-norm term Σ_j scale_j²·c_j²,
     precomputed at encode time so the scan is one matmul per cell."""
-    from hawk_pack_spark.operators.materialize import materialize
-    from hawk_pack_spark.operators.similarity import (
-        ivf_build,
-        sq8_encode,
-        sq8_train,
+    resid, centers = _residual_cells(
+        vectors, n_clusters, id_col, vec_col, seed, kmeans_iter, fit_fraction
     )
-
-    assigned, centers = ivf_build(
-        vectors, n_clusters=n_clusters, id_col=id_col, vec_col=vec_col,
-        seed=seed, max_iter=kmeans_iter, fit_fraction=fit_fraction,
-    )
-    spark = vectors.sparkSession
-    centers_df = spark.createDataFrame(
-        [(i, [float(x) for x in c]) for i, c in enumerate(centers)],
-        "cluster int, _center array<double>",
-    )
-    resid = assigned.join(F.broadcast(centers_df), "cluster").select(
-        F.col(id_col).cast("long").alias("vec_id"),
-        F.col("cluster").cast("int").alias("cell"),
-        F.zip_with(
-            F.col(vec_col).cast("array<double>"), "_center",
-            lambda v, c: v - c,
-        ).alias("_resid"),
-        # same materialize-once rationale as ivfpq_build: sq8_train,
-        # sq8_encode and the cell re-join each re-derive the k-means
-        # assignment otherwise; size-gated barrier (r13), see ivfpq_build
-    )
-    resid = materialize(resid)
     lo, scale = sq8_train(resid, vec_col="_resid")
     enc = sq8_encode(resid, lo, scale, vec_id="vec_id", vec_col="_resid")
     encoded = enc.join(resid.select("vec_id", "cell"), "vec_id").select(
@@ -557,122 +535,15 @@ def ivfsq8_search(
     rerank_vec_col: str = "embedding",
     max_driver_queries: int = 100_000,
 ) -> DataFrame:
-    """Asymmetric SQ8 top-k over an IVF-SQ8 index: route each query to
-    its nprobe nearest cells driver-side, JVM-filter the scan to the
-    probed-cell union (PartitionFilters when cell-partitioned on disk),
-    and per (cell, routed-query block) run the expanded-form decode
-    matmul of sq8_topk on residual queries (q − centroid) — one float32
-    matmul per cell over the 8×-smaller code tile, cnorm precomputed.
-    Optional exact re-rank on an ``oversample``·k shortlist. Bounded
-    driver collect (``max_driver_queries``), same serving-surface
-    discipline as ivfpq_search. Returns (query_id, vec_id, dist, rank)
-    with squared-L2 distances."""
-    spark = encoded.sparkSession
-    q_rows = (
-        queries.select(
-            F.col(query_id).cast("long"), F.col(query_col).cast("array<double>")
-        )
-        .limit(max_driver_queries + 1)
-        .collect()
-    )
-    if not q_rows:
-        return spark.createDataFrame(
-            [], "query_id long, vec_id long, dist double, rank int"
-        )
-    if len(q_rows) > max_driver_queries:
-        raise ValueError(
-            f"query batch exceeds max_driver_queries={max_driver_queries}: "
-            "ivfsq8_search routes queries driver-side (a serving surface). "
-            "Split the batch or raise max_driver_queries explicitly."
-        )
-    qids = np.asarray([r[0] for r in q_rows], dtype=np.int64)
-    qx = np.asarray([r[1] for r in q_rows], dtype=np.float64)
-    c_mat = np.asarray(centers, dtype=np.float64)
-    cd = (
-        (qx * qx).sum(1, keepdims=True)
-        - 2.0 * qx @ c_mat.T
-        + (c_mat * c_mat).sum(1)[None, :]
-    )
-    npb = min(nprobe, len(c_mat))
-    order = np.argsort(cd, axis=1, kind="stable")[:, :npb]
-    routed: dict[int, list[int]] = {}
-    for qi in range(len(qids)):
-        for c in order[qi]:
-            routed.setdefault(int(c), []).append(qi)
-    shortlist_k = kth * oversample if rerank_with is not None else kth
-    bc = spark.sparkContext.broadcast(
-        (qids, qx, c_mat, lo, scale, routed, shortlist_k)
-    )
-    scan = encoded.where(F.col("cell").isin(list(routed)))
-
-    def part_topk(batches):
-        import pandas as pd
-
-        qids_, qx_, c_mat_, lo_, scale_, routed_, kth_ = bc.value
-        dim = lo_.shape[0]
-        parts = [pdf for pdf in batches if len(pdf)]
-        if not parts:
-            return
-        whole = pd.concat(parts, ignore_index=True)
-        out = []
-        for cell, pdf in whole.groupby("cell", sort=False):
-            q_idx = routed_.get(int(cell))
-            if not q_idx:
-                continue
-            ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            C = np.frombuffer(
-                b"".join(pdf["codes"]), dtype=np.uint8
-            ).reshape(len(pdf), dim).astype(np.float32)
-            cn = pdf["cnorm"].to_numpy(dtype=np.float64)[None, :]
-            # residual queries for this cell; same expanded form as
-            # sq8_topk: d = ||r||² − 2 (r·s)·C + Σ s²c² (cnorm)
-            r = (qx_[q_idx] - c_mat_[int(cell)][None, :]) - lo_[None, :]
-            r_sq = (r * r).sum(1)[:, None]
-            ws32 = (r * scale_[None, :]).astype(np.float32)
-            d = r_sq - 2.0 * (ws32 @ C.T).astype(np.float64) + cn
-            take = min(kth_, d.shape[1])
-            idx = np.argpartition(d, take - 1, axis=1)[:, :take]
-            out.append(
-                pd.DataFrame(
-                    {
-                        "query_id": np.repeat(qids_[q_idx], take),
-                        "vec_id": ids[idx].ravel(),
-                        "dist": np.take_along_axis(d, idx, axis=1).ravel(),
-                    }
-                )
-            )
-        if out:
-            yield pd.concat(out, ignore_index=True)
-
-    partial = scan.mapInPandas(
-        part_topk, "query_id long, vec_id long, dist double"
-    )
-    adc = topk_rows(
-        partial, ["query_id"], "dist", shortlist_k, tie_cols=["vec_id"]
-    ).select("query_id", "vec_id", "dist", "rank")
-    if rerank_with is None:
-        return adc
-
-    from hawk_pack_spark.functions.distance import distance_expr
-
-    qdf = F.broadcast(
-        queries.select(
-            F.col(query_id).cast("long").alias("query_id"),
-            F.col(query_col).cast("array<double>").alias("qv"),
-        )
-    )
-    exact = (
-        adc.select("query_id", "vec_id")
-        .join(rerank_with.select(
-            F.col(rerank_id_col).cast("long").alias("vec_id"),
-            F.col(rerank_vec_col).cast("array<double>").alias("v"),
-        ), "vec_id")
-        .join(qdf, "query_id")
-        .select(
-            "query_id", "vec_id",
-            distance_expr("l2_sq", F.col("qv"), F.col("v")).alias("dist"),
-        )
-    )
-    return topk_rows(exact, ["query_id"], "dist", kth, tie_cols=["vec_id"]).select(
-        "query_id", "vec_id", "dist", "rank"
+    """Asymmetric SQ8 top-k over an IVF-SQ8 index (`ivfsq8_build`):
+    each query probes its ``nprobe`` nearest cells and is scored as the
+    residual q − centroid, one float32 matmul per cell over the
+    8×-smaller code tile. Optional exact re-rank on an ``oversample``·k
+    shortlist. Returns (query_id, vec_id, dist, rank) with squared-L2
+    distances."""
+    return _scan_topk(
+        encoded, queries, "ivfsq8_search", _sq8_scores, (lo, scale),
+        ("cnorm",), centers, nprobe, kth, query_id, query_col,
+        rerank_with, oversample, rerank_id_col, rerank_vec_col,
+        max_driver_queries,
     )

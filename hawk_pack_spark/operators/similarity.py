@@ -1191,9 +1191,10 @@ def _bounded_query_rows(
 ):
     """Collect the query side with the serving-surface bound shared by
     the PQ/HNSW family (VERDICT r7 #4: these primitives previously
-    collected unbounded). Returns None on overflow — the caller falls
-    back to the fully-distributed expression-join exact path instead of
-    erroring, because the *_topk_numpy scans ARE the bulk fallbacks."""
+    collected unbounded). Returns None on overflow: the *_topk_numpy
+    scans then fall back to the fully-distributed expression-join exact
+    path, because they ARE the bulk fallbacks; the quantized searches
+    (`pq._scan_topk`) raise instead."""
     rows = (
         queries.select(query_id, query_col)
         .limit(max_driver_queries + 1)
@@ -1312,25 +1313,36 @@ def l2_topk_numpy(
     return topk_rows(local, ["query_id"], "dist", k, ascending=True, tie_cols=["vec_id"])
 
 
-def _list_col_matrix(col) -> "np.ndarray":
-    """(n, dim) float64 matrix from an Arrow list<floatish> column —
-    zero-copy reshape of the child values buffer when the lists are
-    uniform-width and null-free, else a row-by-row fallback. Values are
-    identical to the per-row np.asarray conversion either way."""
+def _list_col_matrix(col, dtype=np.float64) -> "np.ndarray":
+    """(n, width) matrix from an Arrow list or binary column — zero-copy
+    reshape of the values buffer when the rows are uniform-width and
+    null-free, else a row-by-row fallback. Values are identical to the
+    per-row np.asarray conversion either way; ``dtype=None`` keeps the
+    stored element type (int16 PQ codes, uint8 SQ8 code bytes)."""
+    import pyarrow as pa
+
     arr = col.combine_chunks() if hasattr(col, "combine_chunks") else col
+    binary = pa.types.is_binary(arr.type)
     try:
         if arr.null_count == 0:
-            off = arr.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
+            if binary:
+                off = np.frombuffer(arr.buffers()[1], dtype=np.int32)[
+                    arr.offset : arr.offset + len(arr) + 1
+                ].astype(np.int64)
+                vals = np.frombuffer(arr.buffers()[2], dtype=np.uint8)
+            else:
+                off = arr.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
+                vals = arr.values.to_numpy(zero_copy_only=False)
             widths = np.diff(off)
             if len(widths) and (widths == widths[0]).all() and widths[0] > 0:
-                vals = arr.values.to_numpy(zero_copy_only=False)
                 mat = vals[off[0]:off[-1]].reshape(len(widths), int(widths[0]))
-                return np.ascontiguousarray(mat, dtype=np.float64)
+                return np.ascontiguousarray(mat, dtype=dtype)
     except Exception:
         pass
-    return np.array(
-        [np.asarray(v, dtype=np.float64) for v in arr.to_pylist()]
-    )
+    return np.array([
+        np.asarray(np.frombuffer(v, dtype=np.uint8) if binary else v, dtype=dtype)
+        for v in arr.to_pylist()
+    ])
 
 
 def hamming_topk_numpy(
@@ -1620,117 +1632,29 @@ def sq8_topk(
     vec_col: str = "embedding",
     max_driver_queries: int = 100_000,
 ) -> DataFrame:
-    """Asymmetric SQ8 top-k: the scan decodes uint8 tiles to
-    v̂ = lo + c·scale and runs the same expanded-form matmul as the
-    exact BLAS path; floats never leave the partition. With
-    ``rerank_with`` (the float table) the scan produces an
-    oversample·k shortlist and the final top-k is exact — the
-    PQ re-rank recipe (pq.py::pq_search) at 4x instead of 32x
-    compression. The query collect is bounded by ``max_driver_queries``
-    (serving-surface discipline, same as ann_search/ivfpq_search)."""
-    import pandas as pd
-
-    spark = encoded.sparkSession
-    q_rows = (
-        queries.select(
-            F.col(query_id).cast("long"), F.col(query_col).cast("array<double>")
-        )
-        .limit(max_driver_queries + 1)
-        .collect()
-    )
-    if len(q_rows) > max_driver_queries:
-        raise ValueError(
-            f"query batch exceeds max_driver_queries={max_driver_queries}: "
-            "sq8_topk broadcasts the query block (a serving surface). "
-            "Split the batch or raise max_driver_queries explicitly."
-        )
-    q_ids = np.asarray([r[0] for r in q_rows], dtype=np.int64)
-    q_mat = np.asarray([r[1] for r in q_rows], dtype=np.float64)
-    if q_mat.size == 0:  # empty batch: empty result, not a kernel crash
-        return spark.createDataFrame(
-            [], "query_id long, vec_id long, dist double, rank int"
-        )
-    shortlist_k = k * oversample if rerank_with is not None else k
-    bc = spark.sparkContext.broadcast((q_ids, q_mat, lo, scale, shortlist_k))
-
-    def part(it):
-        q_ids_, q_mat_, lo_, scale_, kth_ = bc.value
-        # r = q - lo per query; d = ||r||^2 - 2 (C s) . r + ||C s||^2;
-        # the code-norm term is precomputed at encode time (cnorm), so
-        # the scan is ONE matmul on the 8x-smaller code tile
-        r = q_mat_ - lo_[None, :]
-        r_sq = (r * r).sum(1)[:, None]
-        ws = r * scale_[None, :]          # fold the per-dim scale into q
-        t = (scale_ * scale_)[None, :]
-        dim = lo_.shape[0]
-        ws32 = ws.astype(np.float32)
-        for pdf in it:
-            if not len(pdf):
-                continue
-            ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            # one frombuffer over the joined batch instead of a per-row
-            # loop (12x faster at 1M rows), float32 tile matmul (the
-            # scan is approximate; the re-rank is exact float64)
-            C = np.frombuffer(
-                b"".join(pdf["codes"]), dtype=np.uint8
-            ).reshape(len(pdf), dim).astype(np.float32)
-            if "cnorm" in pdf.columns:
-                cn = pdf["cnorm"].to_numpy(dtype=np.float64)[None, :]
-            else:
-                C64 = C.astype(np.float64)
-                cn = ((C64 * C64) * t).sum(1)[None, :]
-            d = r_sq - 2.0 * (ws32 @ C.T).astype(np.float64) + cn
-            kk = min(kth_, d.shape[1])
-            top = np.argpartition(d, kk - 1, axis=1)[:, :kk]
-            rows = []
-            for qi in range(d.shape[0]):
-                for vi in top[qi]:
-                    rows.append((int(q_ids_[qi]), int(ids[vi]), float(d[qi, vi])))
-            yield pd.DataFrame(rows, columns=["query_id", "vec_id", "dist"])
+    """Asymmetric SQ8 top-k over `sq8_encode`'s (vec_id, codes, cnorm):
+    the scan decodes uint8 tiles to v̂ = lo + c·scale and runs the same
+    expanded-form matmul as the exact BLAS path; floats never leave the
+    partition. With ``rerank_with`` (the float table, columns
+    ``vec_id``/``vec_col``) the scan produces an oversample·k shortlist
+    and the final top-k is exact — the PQ re-rank recipe
+    (pq.py::pq_search) at 4x instead of 32x compression. One scan
+    skeleton with the PQ family (`pq._scan_topk`), including its
+    bounded query collect."""
+    from hawk_pack_spark.operators.pq import _scan_topk, _sq8_scores
 
     # codes are ~8x smaller than the float table, so a parquet scan
     # packs them into very few input splits (maxPartitionBytes) and the
     # CPU-bound decode kernel would run near-serial — the AQE-coalescing
     # lesson (NOTES r1 #6). Fan back out when the source arrives narrow.
-    par = spark.sparkContext.defaultParallelism
+    par = encoded.sparkSession.sparkContext.defaultParallelism
     if encoded.rdd.getNumPartitions() < max(2, par // 2):
         encoded = encoded.repartition(par)
-    partial = encoded.mapInPandas(part, "query_id long, vec_id long, dist double")
-    approx = topk_rows(
-        partial, ["query_id"], "dist", shortlist_k, tie_cols=["vec_id"]
-    ).select("query_id", "vec_id", "dist", "rank")
-    if rerank_with is None:
-        return approx
-
-    qdf = F.broadcast(
-        queries.select(
-            F.col(query_id).cast("long").alias("query_id"),
-            F.col(query_col).cast("array<double>").alias("qv"),
-        )
+    return _scan_topk(
+        encoded, queries, "sq8_topk", _sq8_scores, (lo, scale),
+        ("cnorm",), None, 1, k, query_id, query_col, rerank_with,
+        oversample, vec_id, vec_col, max_driver_queries,
     )
-    # the shortlist is bounded (|queries| * k * oversample) — broadcast
-    # it so the corpus side never shuffles for the re-rank fetch
-    exact = (
-        F.broadcast(approx.select("query_id", "vec_id"))
-        .join(
-            rerank_with.select(
-                F.col(vec_id).alias("vec_id"),
-                F.col(vec_col).cast("array<double>").alias("v"),
-            ),
-            "vec_id",
-        )
-        .join(qdf, "query_id")
-        .select(
-            "query_id",
-            "vec_id",
-            F.aggregate(
-                F.zip_with("qv", "v", lambda a, b: (a - b) * (a - b)),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            ).alias("dist"),
-        )
-    )
-    return topk_rows(exact, ["query_id"], "dist", k, tie_cols=["vec_id"])
 
 
 def binary_quantize(

@@ -8,6 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from hawk_pack_spark.operators import pq
+from hawk_pack_spark.operators import similarity as S
 from hawk_pack_spark.operators.knn_exact import knn_exact
 from hawk_pack_spark.sources import load_table
 
@@ -170,27 +171,6 @@ def test_ivfpq_iid_fixture_domain_boundary(spark, sf_dir):
         assert top.vec_id == q and abs(top.dist) < 1e-9
 
 
-def test_ivfpq_search_bounds_driver_collect(spark, sf_dir):
-    """The front door never materializes an oversized query batch on
-    the driver (VERDICT r6 #1): above max_driver_queries it raises a
-    clear error BEFORE collecting the batch."""
-    vecs = _vectors(spark, sf_dir).limit(200).localCheckpoint()
-    encoded, cents, cb = pq.ivfpq_build(vecs, n_clusters=4, m=M, k=16, seed=7)
-    big = vecs.select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    with pytest.raises(ValueError, match="max_driver_queries"):
-        pq.ivfpq_search(
-            encoded, cents, cb, big, kth=5, nprobe=2, max_driver_queries=10
-        )
-    with pytest.raises(ValueError, match="max_driver_queries"):
-        pq.pq_search(
-            pq.pq_encode(vecs, pq.pq_train(vecs, m=M, k=16, seed=7)),
-            pq.pq_train(vecs, m=M, k=16, seed=7),
-            big, kth=5, max_driver_queries=10,
-        )
-
-
 def test_ivfpq_rerank_custom_columns(spark, sf_dir):
     """ivfpq_search re-ranks against a float table with custom id/vec
     column names (ADVICE r6 #3), producing the same rows as the
@@ -223,7 +203,7 @@ def test_ivfsq8_recall_shape_independent(spark, tmp_path):
     clustered corpus (probing 4/32 cells — routing captures clusters)
     and an iid corpus (full-cell union — quantization error alone),
     where IVF-PQ's iid recall collapses. Plus: pruned on-disk layout
-    (PartitionFilters) and the bounded-collect guard."""
+    (PartitionFilters)."""
     import numpy as np
 
     from hawk_pack_spark.operators.similarity import l2_topk_numpy
@@ -279,13 +259,6 @@ def test_ivfsq8_recall_shape_independent(spark, tmp_path):
     assert "PartitionFilters" in plan and "cell" in plan
     assert probe.groupBy("query_id").count().where("count = 5").count() == 3
 
-    # bounded driver collect
-    with pytest.raises(ValueError, match="max_driver_queries"):
-        pq.ivfsq8_search(
-            enc, cents, lo, scale, queries, kth=5, nprobe=2,
-            max_driver_queries=2,
-        )
-
 
 def test_ivfsq8_rerank_exact_and_deterministic(spark, sf_dir):
     """Exact re-rank on the shortlist: self-queries rank themselves
@@ -314,3 +287,98 @@ def test_ivfsq8_rerank_exact_and_deterministic(spark, sf_dir):
     assert {(r.query_id, r.vec_id, r.rank) for r in rows} == {
         (r.query_id, r.vec_id, r.rank) for r in b.collect()
     }
+
+
+# Integer points with every dimension spanning 0..255, each duplicated
+# 12× under shuffled ids: SQ8's bounds are then lo=0, scale=1, the IVF
+# cells are the points themselves, and every PQ/SQ8 distance is an
+# exactly representable integer, independent of BLAS blocking.
+_DUP_POINTS = np.array(
+    [[0] * 8, [255] * 8, [10, 200, 37, 99, 128, 5, 250, 64]], dtype=np.float64
+)
+_DUPS = 12
+
+
+@pytest.fixture(
+    scope="module",
+    params=["pq_search", "ivfpq_search", "sq8_topk", "ivfsq8_search"],
+)
+def quantized(request, spark):
+    """(encoded, search(encoded, queries, k, **kw), ids) for each search
+    of the quantized family over the duplicate corpus."""
+    ids = np.random.default_rng(3).permutation(len(_DUP_POINTS) * _DUPS)
+    vecs = spark.createDataFrame(
+        [(int(v), _DUP_POINTS[j // _DUPS].tolist()) for j, v in enumerate(ids)],
+        "vec_id long, embedding array<double>",
+    )
+    name = request.param
+    if name == "pq_search":
+        cb = pq.pq_train(vecs, m=4, k=16, seed=7)
+        enc = pq.pq_encode(vecs, cb)
+
+        def search(e, q, k, **kw):
+            return pq.pq_search(e, cb, q, kth=k, **kw)
+    elif name == "ivfpq_search":
+        enc, cents, cb = pq.ivfpq_build(vecs, n_clusters=3, m=4, k=16, seed=7)
+
+        def search(e, q, k, **kw):
+            return pq.ivfpq_search(e, cents, cb, q, kth=k, nprobe=3, **kw)
+    elif name == "sq8_topk":
+        lo, scale = S.sq8_train(vecs)
+        enc = S.sq8_encode(vecs, lo, scale)
+
+        def search(e, q, k, **kw):
+            return S.sq8_topk(e, lo, scale, q, k=k, **kw)
+    else:
+        enc, cents, lo, scale = pq.ivfsq8_build(vecs, n_clusters=3, seed=7)
+
+        def search(e, q, k, **kw):
+            return pq.ivfsq8_search(e, cents, lo, scale, q, kth=k, nprobe=3, **kw)
+    return enc.localCheckpoint(), search, ids
+
+
+def _dup_queries(spark, n=2):
+    """Query j sits at distance 1 from point j (j = 0 → the zero point,
+    1 → the all-255 point, 2 → the mixed one)."""
+    rows = []
+    for j in range(n):
+        q = _DUP_POINTS[j].copy()
+        q[0] += -1.0 if q[0] else 1.0
+        rows.append((j, q.tolist()))
+    return spark.createDataFrame(rows, "query_id long, query_vec array<double>")
+
+
+def test_empty_query_batch(spark, quantized):
+    """An empty query batch returns the empty 4-column frame."""
+    enc, search, _ = quantized
+    empty = spark.createDataFrame([], "query_id long, query_vec array<double>")
+    out = search(enc, empty, 5)
+    assert out.columns == ["query_id", "vec_id", "dist", "rank"]
+    assert out.count() == 0
+
+
+def test_search_bounds_driver_collect(spark, quantized):
+    """The front door never materializes an oversized query batch on
+    the driver: above max_driver_queries it raises a clear error
+    BEFORE collecting the batch."""
+    enc, search, _ = quantized
+    with pytest.raises(ValueError, match="max_driver_queries"):
+        search(enc, _dup_queries(spark, 3), 5, max_driver_queries=2)
+
+
+def test_partial_topk_breaks_ties_by_vec_id(spark, quantized):
+    """With more exact duplicates than k, the top-k is the k lowest ids
+    of the tied group, at every partitioning of the codes: the partial
+    top-k selects by (dist, vec_id), the order of the global merge."""
+    enc, search, ids = quantized
+    queries = _dup_queries(spark)
+
+    def rows(e):
+        return sorted(tuple(r) for r in search(e, queries, 5).collect())
+
+    one = rows(enc.coalesce(1))
+    assert one == rows(enc.repartition(4, "vec_id"))
+    for j in range(2):
+        got = [(r[3], r[1], r[2]) for r in one if r[0] == j]
+        lowest = sorted(ids[j * _DUPS : (j + 1) * _DUPS])[:5]
+        assert sorted(got) == [(i + 1, int(v), 1.0) for i, v in enumerate(lowest)]
