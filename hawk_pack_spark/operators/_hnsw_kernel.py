@@ -1,4 +1,4 @@
-"""Partition-local HNSW kernel: pure numpy, runs inside applyInPandas.
+"""Partition-local HNSW kernel: numpy and Python, runs inside applyInPandas.
 
 Implements the HNSW algorithm (Malkov & Yashunin 2016, arXiv:1603.09320,
 cited by the reference's README) for one index shard held in memory.
@@ -9,7 +9,12 @@ to a strictly higher layer; queries and vectors share one ID space.
 
 This file is deliberately Spark-free: plain numpy in / numpy out, so it
 unit-tests in milliseconds and the Spark layer (operators/hnsw.py) stays
-a thin orchestration shell.
+a thin orchestration shell. The methods here are the semantic
+reference; for the built-in l2_sq and hamming metrics, ``build_local``
+and ``LocalHNSW.search_batch`` over a frozen index dispatch to the
+gcc-compiled kernel in ``_native_hnsw.c`` (see ``_native.py``), same
+algorithm and tie order, falling back to the Python loop when it is
+unavailable.
 """
 
 from __future__ import annotations
@@ -204,6 +209,33 @@ class LocalHNSW:
         ef0 = max(ef_search or p.get_ef_search(0), k)
         w = self.search_layer(q_idx, w, ef0, 0)
         return w[:k]
+
+    def search_batch(
+        self, q_positions, k: int, ef_search: int | None = None
+    ) -> tuple[np.ndarray, np.ndarray]:
+        """``search`` for every query position: (nq, k) local node ids
+        (-1 where a query has fewer than k results) and distances. A
+        frozen l2_sq/hamming index runs the C kernel; anything else
+        loops over ``search``."""
+        from hawk_pack_spark.operators import _native as NAT
+
+        q_positions = np.asarray(q_positions, dtype=np.int64)
+        if self.entry is not None and self.csr is not None and NAT.usable(
+            self.metric.name, self.params
+        ):
+            p = self.params
+            return NAT.search(
+                self.metric.data, self.metric.name, self.csr,
+                self.entry, self.entry_layer,
+                [p.get_ef_search(lc) for lc in range(self.entry_layer + 1)],
+                max(ef_search or p.get_ef_search(0), k), k, q_positions,
+            )
+        local = np.full((len(q_positions), k), -1, dtype=np.int64)
+        dist = np.zeros((len(q_positions), k), dtype=np.float64)
+        for i, q in enumerate(q_positions.tolist()):
+            for j, (d, n) in enumerate(self.search(q, k, ef_search)):
+                local[i, j], dist[i, j] = n, d
+        return local, dist
 
     # -- insert ------------------------------------------------------------
     def insert(self, q_idx: int, insertion_layer: int) -> None:

@@ -1,11 +1,17 @@
-"""Lazy gcc-compiled native HNSW build kernel (ctypes).
+"""Lazy gcc-compiled native HNSW kernel (ctypes).
 
 The Python kernel in ``_hnsw_kernel.py`` is the semantic reference; this
 module compiles ``_native_hnsw.c`` — the same algorithm with the same
-tie-breaking — at first use and exposes ``build()``. The build path
-dispatches here for the built-in l2_sq/hamming metrics (guide §1.2 step
-2: per-task work — the shard build is pure CPU inside applyInPandas and
-was ~95% Python interpreter overhead).
+tie-breaking — at first use and exposes two entry points:
+
+- ``build()``: the shard build (``build_local``), which was ~95% Python
+  interpreter overhead inside applyInPandas;
+- ``search()``: a batch of kNN queries over a frozen (CSR) index
+  (``LocalHNSW.search_batch``), the serving and cogroup search kernel.
+
+Both cover only the built-in l2_sq and hamming metrics. cosine, dot and
+user-registered ``CUSTOM_BATCH`` metrics (the opaque-distance plug-in)
+always run on the Python kernel.
 
 Determinism & parity:
 - hamming distances are integer popcounts — bit-identical to Python.
@@ -17,8 +23,8 @@ Determinism & parity:
   distances straddle that ulp, which the parity suite + pinned tests
   re-verify (see OPTIMIZATION_r12.md).
 
-If gcc or anything else is unavailable, ``build()`` returns None and the
-caller falls back to the pure-Python insert loop (identical semantics).
+If gcc or anything else is unavailable, ``build()``/``search()`` return
+None and the caller falls back to the Python kernel (identical semantics).
 Set ``SPARK_GRAFT_NO_NATIVE=1`` to force the Python path.
 """
 
@@ -88,6 +94,16 @@ def _compile() -> "ctypes.CDLL | None":
     lib.hps_entry.argtypes = [ctypes.c_void_p] * 3
     lib.hps_free.restype = None
     lib.hps_free.argtypes = [ctypes.c_void_p]
+    lib.hps_search.restype = None
+    lib.hps_search.argtypes = [
+        ctypes.c_int64, ctypes.c_int32,
+        ctypes.c_void_p, ctypes.c_void_p, ctypes.c_int32,
+        ctypes.c_void_p, ctypes.c_void_p, ctypes.c_int32,
+        ctypes.c_int64, ctypes.c_int32,
+        ctypes.c_void_p, ctypes.c_int64, ctypes.c_int64,
+        ctypes.c_int64, ctypes.c_void_p,
+        ctypes.c_void_p, ctypes.c_void_p,
+    ]
     return lib
 
 
@@ -118,6 +134,15 @@ def usable(metric_name: str, params) -> bool:
     return get_lib() is not None
 
 
+def _payload_args(data: np.ndarray, mcode: int):
+    """(dim, fdata ptr, codes ptr, keep-alive array) for the C kernel."""
+    if mcode == 1:
+        codes = np.ascontiguousarray(data.view(np.uint64).reshape(-1))
+        return 0, None, codes.ctypes.data, codes
+    fdata = np.ascontiguousarray(data, dtype=np.float64)
+    return fdata.shape[1], fdata.ctypes.data, None, fdata
+
+
 def build(
     data: np.ndarray,
     metric_name: str,
@@ -133,15 +158,7 @@ def build(
         return None
     n = len(layers)
     mcode = _METRIC_CODE[metric_name]
-    if mcode == 1:
-        codes = np.ascontiguousarray(data.view(np.uint64).reshape(-1))
-        fdata = None
-        dim = 0
-        fptr, cptr = None, codes.ctypes.data
-    else:
-        fdata = np.ascontiguousarray(data, dtype=np.float64)
-        dim = fdata.shape[1]
-        fptr, cptr = fdata.ctypes.data, None
+    dim, fptr, cptr, _keep = _payload_args(data, mcode)
     layers32 = np.ascontiguousarray(layers, dtype=np.int32)
     order64 = np.ascontiguousarray(order, dtype=np.int64)
     npl = len(params.M_per_layer)
@@ -176,3 +193,50 @@ def build(
     finally:
         lib.hps_free(ctx)
     return e_node, e_layer, e_dst, e_dist, entry.value, entry_layer.value
+
+
+def search(
+    data: np.ndarray,
+    metric_name: str,
+    csr: dict,
+    entry: int,
+    entry_layer: int,
+    ef_tab: list,
+    ef0: int,
+    k: int,
+    q_pos: np.ndarray,
+):
+    """Run the C batch search over a frozen index (``csr``: layer ->
+    (indptr, nbrs)); requires the library (``usable``). Returns (nq, k)
+    local node ids (-1 pad) and distances."""
+    lib = get_lib()
+    mcode = _METRIC_CODE[metric_name]
+    dim, fptr, cptr, _keep = _payload_args(data, mcode)
+    nlayers = max(csr, default=-1) + 1
+    arrays = {
+        lc: [np.ascontiguousarray(a, dtype=np.int64) for a in pair]
+        for lc, pair in csr.items()
+    }
+    indptr, nbrs = (
+        (ctypes.c_void_p * max(nlayers, 1))(*[
+            arrays[lc][i].ctypes.data if lc in arrays else None
+            for lc in range(nlayers)
+        ])
+        for i in (0, 1)
+    )
+    ef32 = np.ascontiguousarray(ef_tab, dtype=np.int32)
+    q64 = np.ascontiguousarray(q_pos, dtype=np.int64)
+    nq = len(q64)
+    if len(ef32) != entry_layer + 1 or not 0 <= entry < len(data):
+        raise ValueError("ef table or entry point does not match the index")
+    if nq and (q64.min() < 0 or q64.max() >= len(data)):
+        raise IndexError("query position outside the staged payload")
+    out_node = np.empty((nq, k), dtype=np.int64)
+    out_dist = np.empty((nq, k), dtype=np.float64)
+    lib.hps_search(
+        len(data), dim, fptr, cptr, mcode,
+        indptr, nbrs, nlayers, entry, entry_layer,
+        ef32.ctypes.data, ef0, k, nq, q64.ctypes.data,
+        out_node.ctypes.data, out_dist.ctypes.data,
+    )
+    return out_node, out_dist

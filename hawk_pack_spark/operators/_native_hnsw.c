@@ -1,5 +1,6 @@
-/* Partition-local HNSW build kernel, C form of _hnsw_kernel.py's
- * build_local (insert/search_to_insert/connect_bidir/select_neighbors).
+/* Partition-local HNSW kernel, C form of _hnsw_kernel.py's build_local
+ * (insert/search_to_insert/connect_bidir/select_neighbors) and of
+ * LocalHNSW.search over a frozen (CSR) index (hps_search).
  *
  * Same algorithm, same tie-breaking, same candidate/beam heap semantics
  * as the Python kernel (heapq on (dist, node) tuples): every comparator
@@ -139,6 +140,10 @@ typedef struct {
     double *dist_scratch;
     int64_t nbr_cap;
     int32_t max_layer_cap;   /* max representable layer from layers[] */
+    /* frozen search-only adjacency (hps_search): per layer CSR, NULL
+     * indptr = layer absent; when set, the slot pool above is unused */
+    const int64_t *const *csr_indptr, *const *csr_nbrs;
+    int32_t csr_nlayers;
 } ctx_t;
 
 static inline int32_t clampi(int32_t lc, int32_t npl) {
@@ -191,6 +196,35 @@ static void ensure_nbr(ctx_t *c, int64_t need) {
     }
 }
 
+/* unvisited neighbours of `node` at layer lc into nbr_scratch, marked
+ * visited; returns their count. The CSR form filters then marks, like
+ * the Python kernel's numpy mask (a repeated neighbour is kept twice). */
+static int64_t gather_unvisited(ctx_t *c, int64_t node, int32_t lc, int32_t ep) {
+    int64_t k = 0;
+    if (c->csr_indptr) {
+        if (lc >= c->csr_nlayers || !c->csr_indptr[lc]) return 0;
+        const int64_t *ns = c->csr_nbrs[lc] + c->csr_indptr[lc][node];
+        int64_t nlen = c->csr_indptr[lc][node + 1] - c->csr_indptr[lc][node];
+        ensure_nbr(c, nlen);
+        for (int64_t j = 0; j < nlen; j++)
+            if (c->visited_epoch[ns[j]] != ep) c->nbr_scratch[k++] = ns[j];
+        for (int64_t j = 0; j < k; j++) c->visited_epoch[c->nbr_scratch[j]] = ep;
+        return k;
+    }
+    int32_t nlen = *alen_at(c, node, lc);
+    if (!nlen) return 0;
+    pair_t *ns = slots(c, node, lc);
+    ensure_nbr(c, nlen);
+    for (int32_t j = 0; j < nlen; j++) {
+        int64_t nb = ns[j].n;
+        if (c->visited_epoch[nb] != ep) {
+            c->visited_epoch[nb] = ep;
+            c->nbr_scratch[k++] = nb;
+        }
+    }
+    return k;
+}
+
 /* best-first beam search in one layer; w in/out (ascending (d,n)), returns
  * new length (<= ef). Mirrors LocalHNSW.search_layer exactly. */
 static int64_t search_layer(ctx_t *c, int64_t q, pair_t *w, int64_t wlen,
@@ -213,18 +247,7 @@ static int64_t search_layer(ctx_t *c, int64_t q, pair_t *w, int64_t wlen,
     while (cand->len) {
         pair_t cc = cand_pop(cand);
         if (cc.d > beam->v[0].d) break;
-        int32_t nlen = *alen_at(c, cc.n, lc);
-        if (!nlen) continue;
-        pair_t *ns = slots(c, cc.n, lc);
-        ensure_nbr(c, nlen);
-        int64_t k = 0;
-        for (int32_t j = 0; j < nlen; j++) {
-            int64_t nb = ns[j].n;
-            if (c->visited_epoch[nb] != ep) {
-                c->visited_epoch[nb] = ep;
-                c->nbr_scratch[k++] = nb;
-            }
-        }
+        int64_t k = gather_unvisited(c, cc.n, lc, ep);
         if (!k) continue;
         for (int64_t j = 0; j < k; j++)
             c->dist_scratch[j] = dist1(c, q, c->nbr_scratch[j]);
@@ -438,6 +461,55 @@ void hps_entry(void *ctxp, int64_t *entry, int32_t *entry_layer) {
     ctx_t *c = (ctx_t *)ctxp;
     *entry = c->entry;
     *entry_layer = c->entry_layer;
+}
+
+/* kNN over a frozen index for nq queries (LocalHNSW.search per query):
+ * descend from the entry point with ef_tab[lc] per upper layer, then a
+ * beam of ef0 (the caller's max(ef_search, k)) at layer 0. Data rows
+ * 0..n-1 include the queries, staged at positions q_pos. Writes the
+ * first k of each result into row q of the (nq, k) outputs, padding
+ * with node -1 / dist 0. */
+void hps_search(int64_t n, int32_t dim, const double *fdata,
+                const uint64_t *codes, int32_t metric,
+                const int64_t *const *indptr, const int64_t *const *nbrs,
+                int32_t nlayers, int64_t entry, int32_t entry_layer,
+                const int32_t *ef_tab, int64_t ef0, int64_t k,
+                int64_t nq, const int64_t *q_pos,
+                int64_t *out_node, double *out_dist) {
+    ctx_t c;
+    memset(&c, 0, sizeof(c));
+    c.n = n;
+    c.dim = dim;
+    c.metric = metric;
+    c.fdata = fdata;
+    c.codes = codes;
+    c.csr_indptr = indptr;
+    c.csr_nbrs = nbrs;
+    c.csr_nlayers = nlayers;
+    c.visited_epoch = (int32_t *)calloc(n, sizeof(int32_t));
+    int64_t wcap = ef0;
+    for (int32_t lc = 1; lc <= entry_layer; lc++)
+        if (ef_tab[lc] > wcap) wcap = ef_tab[lc];
+    pair_t *w = (pair_t *)malloc((wcap + 1) * sizeof(pair_t));
+    for (int64_t qi = 0; qi < nq; qi++) {
+        int64_t q = q_pos[qi];
+        w[0].d = dist1(&c, q, entry);
+        w[0].n = entry;
+        int64_t wlen = 1;
+        for (int32_t lc = entry_layer; lc > 0; lc--)
+            wlen = search_layer(&c, q, w, wlen, ef_tab[lc], lc);
+        wlen = search_layer(&c, q, w, wlen, ef0, 0);
+        for (int64_t j = 0; j < k; j++) {
+            out_node[qi * k + j] = j < wlen ? w[j].n : -1;
+            out_dist[qi * k + j] = j < wlen ? w[j].d : 0.0;
+        }
+    }
+    free(w);
+    free(c.visited_epoch);
+    free(c.cand_h.v);
+    free(c.beam_h.v);
+    free(c.nbr_scratch);
+    free(c.dist_scratch);
 }
 
 void hps_free(void *ctxp) {

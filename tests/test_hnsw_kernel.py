@@ -229,3 +229,137 @@ def test_frozen_rehydration_searches_identically():
             ids, full, "l2_sq", params, la, bad_ds, di, layers=node_layers,
             frozen=True,
         )
+
+
+# ---------------------------------------------------------------------------
+# native (gcc/ctypes) kernel parity: the Python kernel is the reference
+
+
+def _native_lib():
+    from hawk_pack_spark.operators import _native as NAT
+
+    lib = NAT.get_lib()
+    if lib is None:
+        pytest.skip("native kernel unavailable (no gcc or SPARK_GRAFT_NO_NATIVE)")
+    return NAT
+
+
+def _shard_data(kind: str, n: int, seed: int, dim: int = 12):
+    """Payload for one shard: ``random`` Gaussian, ``mixture`` (tight
+    clusters), ``dups`` (each vector stored six times) or ``hamming``
+    (uint64 codes with many exact-distance ties)."""
+    rng = np.random.default_rng(seed)
+    if kind == "hamming":
+        return rng.integers(0, 1 << 20, n, dtype=np.int64).view(np.uint64)
+    if kind == "random":
+        return rng.standard_normal((n, dim))
+    if kind == "mixture":
+        centers = 8.0 * rng.standard_normal((6, dim))
+        return centers[rng.integers(0, 6, n)] + 0.05 * rng.standard_normal((n, dim))
+    base = rng.standard_normal((max(n // 6, 1), dim))
+    return base[np.arange(n) % len(base)]
+
+
+def _metric_of(kind: str) -> str:
+    return "hamming" if kind == "hamming" else "l2_sq"
+
+
+@pytest.mark.parametrize("kind", ["random", "mixture", "hamming"])
+def test_native_build_matches_python_build(kind, monkeypatch):
+    """`_try_native_build` claims the adjacency the Python insert loop
+    would produce: same layer/node key order, same neighbour ids, same
+    entry point; l2_sq edge distances may differ in the last ulps
+    (sequential C sum vs numpy's einsum), hamming ones are exact."""
+    NAT = _native_lib()
+    params = HawkParams.new(32, 16, 8)
+    data = _shard_data(kind, 400, seed=3)
+    ids = np.random.default_rng(4).permutation(10_000)[:400].astype(np.int64)
+    metric = _metric_of(kind)
+    nat = K.build_local(ids, data, metric, params)
+    monkeypatch.setattr(NAT, "get_lib", lambda: None)
+    py = K.build_local(ids, data, metric, params)
+
+    assert (nat.entry, nat.entry_layer) == (py.entry, py.entry_layer)
+    assert list(nat.adj) == list(py.adj)
+    for lc in py.adj:
+        assert list(nat.adj[lc]) == list(py.adj[lc])
+        for node, nbrs in py.adj[lc].items():
+            got = nat.adj[lc][node]
+            assert [n for _, n in got] == [n for _, n in nbrs], (lc, node)
+            d_nat = np.array([d for d, _ in got])
+            d_py = np.array([d for d, _ in nbrs])
+            if metric == "hamming":
+                assert d_nat.tolist() == d_py.tolist()
+            else:
+                np.testing.assert_allclose(d_nat, d_py, rtol=1e-12, atol=0)
+
+
+def _frozen_shard(kind: str, n: int, nq: int, seed: int, params, query_rows=None):
+    """A frozen (serving-form) shard index with ``nq`` queries staged
+    after its ``n`` vectors; ``query_rows`` stages copies of stored
+    vectors as the queries instead of fresh draws."""
+    data = _shard_data(kind, n + nq, seed)
+    stored, q = data[:n], data[n:]
+    if query_rows is not None:
+        q = stored[query_rows]
+    ids = np.arange(n, dtype=np.int64) * 7 + 5
+    metric = _metric_of(kind)
+    built = K.build_local(ids, stored, metric, params)
+    la, ds, di = K.adjacency_arrays(built, ids)
+    layers = K.assign_layer(K.uniform_from_ids(ids), params.m_L)
+    full = np.concatenate([stored, q]) if metric == "hamming" else np.vstack([stored, q])
+    index = K.index_from_arrays(
+        ids, full, metric, params, la, ds, di, layers=layers, frozen=True
+    )
+    return index, np.arange(n, n + len(q))
+
+
+@pytest.mark.parametrize(
+    "kind, n, k, ef_search, self_queries",
+    [
+        ("random", 600, 10, None, False),
+        ("mixture", 600, 10, None, False),
+        ("dups", 600, 10, None, False),
+        ("hamming", 600, 10, None, False),
+        ("random", 600, 10, 4, False),       # ef override below k: ef0 = k
+        ("mixture", 600, 5, 80, False),      # ef override above the default
+        ("random", 600, 10, None, True),     # queries equal stored vectors
+        ("dups", 600, 10, None, True),
+        ("hamming", 600, 10, None, True),
+        ("random", 0, 10, None, False),      # empty shard
+        ("hamming", 1, 10, None, False),     # one-node shard
+        ("random", 1, 3, None, False),
+        ("random", 7, 20, None, False),      # k larger than the shard
+        ("hamming", 7, 20, None, True),
+    ],
+)
+def test_search_batch_native_matches_python(kind, n, k, ef_search, self_queries, monkeypatch):
+    """`LocalHNSW.search_batch` on the C kernel must return the Python
+    search loop's ids (same tie order, same ef rule) and its distances
+    (exact for hamming, within 1e-12 relative for l2_sq)."""
+    NAT = _native_lib()
+    params = HawkParams.new(32, 16, 8)
+    rows = np.random.default_rng(9).integers(0, n, 40) if self_queries else None
+    index, qpos = _frozen_shard(kind, n, 40, seed=11, params=params, query_rows=rows)
+    calls = []
+    real_search = NAT.search
+    monkeypatch.setattr(NAT, "search", lambda *a: calls.append(1) or real_search(*a))
+    loc, dist = index.search_batch(qpos, k, ef_search)
+    assert calls or n == 0  # the native path ran (an empty shard never needs it)
+    monkeypatch.setattr(NAT, "get_lib", lambda: None)
+    ref_loc, ref_dist = index.search_batch(qpos, k, ef_search)
+
+    assert loc.shape == dist.shape == (40, k)
+    assert loc.tolist() == ref_loc.tolist()
+    for j, q in enumerate(qpos.tolist()):
+        want = index.search(q, k, ef_search)
+        assert loc[j, : len(want)].tolist() == [m for _, m in want]
+        assert (loc[j, len(want):] == -1).all()
+    if kind == "hamming":
+        assert dist.tolist() == ref_dist.tolist()
+    else:
+        np.testing.assert_allclose(dist, ref_dist, rtol=1e-12, atol=0)
+    if self_queries and kind != "dups":  # 6x duplicates may strand a copy
+        assert (dist[:, 0] == 0.0).all()
+    if n:
+        assert (loc[:, : min(k, n)] >= 0).all()

@@ -567,6 +567,80 @@ def test_serving_search_split_shard_raises_clear_error(spark):
         ).collect()
 
 
+def _group_stage_tasks(sc, group: str, timeout_s: float = 30.0) -> list[int]:
+    """numTasks of every stage the job group ran, in stage-id order, read
+    from the status tracker once every job of the group has finished
+    (listener events arrive asynchronously after the action returns)."""
+    import time
+
+    st = sc.statusTracker()
+    deadline = time.monotonic() + timeout_s
+    while True:
+        jobs = [st.getJobInfo(j) for j in st.getJobIdsForGroup(group)]
+        done = jobs and all(
+            j is not None and j.status in ("SUCCEEDED", "FAILED") for j in jobs
+        )
+        stages = sorted({s for j in jobs if j is not None for s in j.stageIds})
+        infos = [st.getStageInfo(s) for s in stages]
+        if done and all(i is not None for i in infos):
+            return [i.numTasks for i in infos]
+        assert time.monotonic() < deadline, "job group did not finish in time"
+        time.sleep(0.2)
+
+
+def test_search_serving_runs_one_python_task_per_core(spark):
+    """The serving scan is coalesced to defaultParallelism partitions:
+    over a 15-shard index on local[4], the Python (mapInPandas) stage —
+    the job group's first stage, the scan leaf — runs at most 4 tasks,
+    not one per shard partition, and results are unchanged."""
+    params = HawkParams.new(32, 16, 8)
+    codes = spark.range(600).select(
+        F.col("id").alias("vec_id"), (F.col("id") * 37).alias("code")
+    )
+    index = hnsw.build_index(
+        codes, metric="hamming", params=params, num_shards=15, vec_col="code"
+    ).localCheckpoint()
+    assert index.rdd.getNumPartitions() == 15
+    queries = spark.range(0, 600, 13).select(
+        F.col("id").alias("query_id"), (F.col("id") * 37).alias("query_vec")
+    )
+    sc = spark.sparkContext
+    assert sc.defaultParallelism == 4
+    res = hnsw.search_serving(
+        index, queries, k=3, metric="hamming", params=params
+    )
+    group = "test-serving-task-count"
+    sc.setJobGroup(group, "search_serving task count")
+    try:
+        rows = res.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    tasks = _group_stage_tasks(sc, group)
+    assert tasks[0] <= 4, tasks
+    assert all(
+        r.vec_id == r.query_id and r.dist == 0.0 for r in rows if r.rank == 1
+    )
+    assert len(rows) == 3 * len(range(0, 600, 13))
+
+
+def test_search_serving_bounds_driver_collect(spark, code_index, monkeypatch):
+    """search_serving collects its query batch through the same bounded
+    helper as ann_search and raises a ValueError naming the bound when
+    the batch overflows it (the pq searches' contract)."""
+    monkeypatch.setattr(hnsw, "MAX_DRIVER_QUERIES", 5)
+    queries = spark.range(6).select(
+        F.col("id").alias("query_id"), F.col("id").alias("query_vec")
+    )
+    with pytest.raises(ValueError, match="max_driver_queries=5"):
+        hnsw.search_serving(
+            code_index, queries, k=3, metric="hamming", params=PARAMS
+        )
+    got = hnsw.search_serving(
+        code_index, queries.limit(5), k=1, metric="hamming", params=PARAMS
+    ).collect()
+    assert sorted(r.query_id for r in got) == list(range(5))
+
+
 def test_choose_ann_path_pins_measured_crossover():
     """The dispatch rule must reproduce every measured point of the
     1M/2M/10M ladder (NOTES r4/r5): full-union batches flip on routed
