@@ -53,7 +53,7 @@ from pyspark.sql import functions as F
 
 from hawk_pack_spark.config import DEFAULT_PARAMS, HawkParams
 from hawk_pack_spark.operators import _hnsw_kernel as K
-from hawk_pack_spark.operators.similarity import _bounded_query_rows
+from hawk_pack_spark.operators.similarity import _collect_query_batch
 
 INDEX_SCHEMA = (
     "shard int, vec_id long, layer int, code long, vec array<double>, "
@@ -107,25 +107,6 @@ def _search_shard(
         "vec_id": ids[local[hit]],
         "dist": dist[hit],
     })
-
-
-def _collect_query_batch(
-    qn: DataFrame, metric: str, max_driver_queries: int
-) -> tuple[np.ndarray, np.ndarray] | None:
-    """Bounded driver collect of a `_normalize_vectors` query frame:
-    (q_ids, q_data), or None when it holds more than
-    ``max_driver_queries`` rows — the serving surfaces must not
-    materialize an arbitrarily large batch on the driver."""
-    payload = "code" if metric == "hamming" else "vec"
-    rows = _bounded_query_rows(qn, "query_id", payload, max_driver_queries)
-    if rows is None:
-        return None
-    q_ids = np.array([r[0] for r in rows], dtype=np.int64)
-    if metric == "hamming":
-        q_data = np.array([r[1] for r in rows], dtype=np.int64).view(np.uint64)
-    else:
-        q_data = np.array([np.asarray(r[1], dtype=np.float64) for r in rows])
-    return q_ids, q_data
 
 
 def _fold_lr(terms: np.ndarray) -> np.ndarray:
@@ -562,7 +543,8 @@ def search_serving(
         qn = _normalize_vectors(
             queries, query_id, query_col, metric, out_id="query_id"
         )
-        batch = _collect_query_batch(qn, metric, MAX_DRIVER_QUERIES)
+        payload = "code" if metric == "hamming" else "vec"
+        batch = _collect_query_batch(qn, "query_id", payload, MAX_DRIVER_QUERIES)
         if batch is None:
             raise ValueError(
                 f"query batch exceeds max_driver_queries={MAX_DRIVER_QUERIES}: "
@@ -830,7 +812,8 @@ def ann_search(
     # materialize it on the driver (VERDICT r5 #7). Overflow falls back
     # to the cogroup `search` (fully distributed, zero driver
     # materialization).
-    batch = _collect_query_batch(qn, metric, max_driver_queries)
+    payload = "code" if metric == "hamming" else "vec"
+    batch = _collect_query_batch(qn, "query_id", payload, max_driver_queries)
     if batch is None:
         if decision_out is not None:
             decision_out.update(

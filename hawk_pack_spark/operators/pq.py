@@ -13,33 +13,44 @@ does not depend on the corpus shape. IVF variants encode RESIDUALS
   each subvector's nearest-centroid id, one Arrow-batched pandas UDF
   with the codebooks in a broadcast. SQ8 train/encode live in
   `similarity` (`sq8_train`, `sq8_encode`).
-- SEARCH: every search (`pq_search`, `ivfpq_search`, `ivfsq8_search`
-  and `similarity.sq8_topk`) is argument handling around one skeleton,
-  `_scan_topk`, parameterized by a distance scorer — the hawk-pack
-  shape of a fixed engine over a store's distance:
+- SEARCH: every search (`pq_search`, `ivfpq_search`, `ivfsq8_search`,
+  `similarity.sq8_topk` and the exact scans `similarity.l2_topk_numpy`,
+  `hamming_topk_numpy` and `cosine_topk_numpy`) is argument handling
+  around one skeleton, `_scan_topk`, parameterized by a distance
+  scorer — the hawk-pack shape of a fixed engine over a store's
+  distance:
   1. collect the query batch (bounded, below);
   2. route each query to its ``nprobe`` nearest cells (stable sort on
-     the expanded-form distance; a flat index is one cell at the
-     origin that every query is routed to);
+     the expanded-form distance); a flat scan skips routing: every
+     query meets every row, with no residual, so the query payload
+     keeps its dtype (uint64 Hamming codes);
   3. filter the scan to the routed cells (`cell IN (...)`, which
      becomes PartitionFilters on a cell-partitioned layout, so
      per-query I/O tracks nprobe);
-  4. per (Arrow batch, cell), score the routed residual queries
-     against the codes with ``score(state, rq, codes[, cnorm]) ->
-     (nq_c, n)`` and keep each query's partial top-k by (dist, vec_id);
+  4. per (Arrow batch, cell), score the routed (residual) queries
+     against the payload with ``score(state, rq, codes[, cnorm]) ->
+     (nq_c, n)``, in query chunks whose distance matrix stays under
+     `_TILE_BYTES`, and keep each query's partial top-k by
+     (dist, vec_id) — ties break by vec_id at any partitioning;
   5. merge globally with `topk_rows`, then optionally re-rank an
      ``oversample``·k shortlist with exact float L2² distances.
 
   Scorers: `_adc_scores` (PQ ADC — per-subspace LUT in m matmuls, then
-  an m-gather sum in subspace order; no float vector is read) and
+  an m-gather sum in subspace order; no float vector is read),
   `_sq8_scores` (asymmetric SQ8 — the expanded form over the encode-
-  time ``cnorm``, one float32 matmul on the code tile).
+  time ``cnorm``, one float32 matmul on the code tile), and in
+  `similarity` the exact `_l2_scores` (expanded-form selection, whose
+  picks `_l2_refine` recomputes in the difference form),
+  `_hamming_scores` (XOR + 16-bit popcount LUT) and `_cosine_scores`
+  (−sim, negated back by `cosine_topk_numpy`).
 
 Serving-surface bound: every search collects its query batch to the
 driver, bounded by ``max_driver_queries`` (the discipline of
-`ann_search`, hnsw.py). An oversized batch raises a ValueError naming
-the bound instead of risking a driver OOM; bulk batches belong on the
-distributed exact scan (`knn_exact`) or the cogroup HNSW path.
+`ann_search`, hnsw.py). Two overflow policies: the quantized searches
+raise a ValueError naming the bound instead of risking a driver OOM;
+the exact scans, which are the bulk fallbacks, run the distributed
+expression-join scan (`knn_exact`) instead. Bulk batches belong there
+or on the cogroup HNSW path.
 
 All stages are seeded and deterministic. Recall vs exact kNN is
 asserted in tests on the fixture embeddings.
@@ -54,13 +65,19 @@ from pyspark.sql import functions as F
 from hawk_pack_spark.functions.distance import distance_expr
 from hawk_pack_spark.operators.materialize import materialize
 from hawk_pack_spark.operators.similarity import (
-    _bounded_query_rows,
+    _collect_query_batch,
     _list_col_matrix,
     ivf_build,
     sq8_encode,
     sq8_train,
 )
 from hawk_pack_spark.operators.topk import topk_rows
+
+# Byte budget of one scored tile, the (routed queries × batch rows)
+# float64 distance matrix: each (Arrow batch, cell) is scored in query
+# chunks under it, so a task's memory does not grow with the query
+# batch (100 000 queries × a 10 000-row Arrow batch is 8 GB at once).
+_TILE_BYTES = 96 << 20
 
 
 def _kmeans_np(x: np.ndarray, k: int, seed: int, iters: int = 20) -> np.ndarray:
@@ -296,6 +313,17 @@ def _topk_cols(d: np.ndarray, ids: np.ndarray, take: int) -> np.ndarray:
     return idx
 
 
+def _arrow_matrix(col) -> np.ndarray:
+    """A scanned Arrow column as numpy, decoded by its type: list and
+    binary columns through `_list_col_matrix` in their stored element
+    type, primitive ones (vec_id, 64-bit Hamming codes, cnorm) as is."""
+    import pyarrow as pa
+
+    if pa.types.is_primitive(col.type):
+        return col.to_numpy(zero_copy_only=False)
+    return _list_col_matrix(col, dtype=None)
+
+
 def _scan_topk(
     encoded: DataFrame,
     queries: DataFrame,
@@ -313,15 +341,31 @@ def _scan_topk(
     rerank_id_col: str,
     rerank_vec_col: str,
     max_driver_queries: int,
+    id_col: str = "vec_id",
+    code_col: str = "codes",
+    overflow=None,
+    pre: tuple | None = None,
+    refine=None,
 ) -> DataFrame:
-    """The quantized-search skeleton (module docstring, steps 1-5).
+    """The search skeleton (module docstring, steps 1-5).
     ``score(state, rq, codes, *aux_columns)`` returns the (nq_c, n)
-    distance matrix of one cell's routed residual queries against its
-    codes; ``centers=None`` is a flat index. Returns
+    distance matrix of routed queries (residuals under IVF) against the
+    ``code_col`` payload of the rows whose id is ``id_col``;
+    ``refine(state, rq, idx, codes, *aux_columns)``, when given,
+    recomputes the (nq_c, take) distances of the selected columns
+    ``idx``. ``centers=None`` is a flat scan: no routing, no residual,
+    so the query payload keeps its dtype. ``pre`` is an already
+    collected (ids, payload) batch. ``overflow`` answers a batch above
+    ``max_driver_queries`` (a no-argument callable returning the
+    result frame); without it the batch raises ValueError. Returns
     (query_id, vec_id, dist, rank)."""
     spark = encoded.sparkSession
-    q_rows = _bounded_query_rows(queries, query_id, query_col, max_driver_queries)
-    if q_rows is None:
+    batch = pre if pre is not None else _collect_query_batch(
+        queries, query_id, query_col, max_driver_queries
+    )
+    if batch is None:
+        if overflow is not None:
+            return overflow()
         raise ValueError(
             f"query batch exceeds max_driver_queries={max_driver_queries}: "
             f"{caller} collects the query batch driver-side (a serving "
@@ -329,63 +373,69 @@ def _scan_topk(
             "explicitly, or use the distributed exact path (knn_exact) "
             "for bulk batches."
         )
-    if not q_rows:
+    qids, qx = batch
+    if not len(qids):
         return spark.createDataFrame(
             [], "query_id long, vec_id long, dist double, rank int"
         )
-    qids = np.asarray([r[0] for r in q_rows], dtype=np.int64)
-    qx = np.asarray([r[1] for r in q_rows], dtype=np.float64)
-    if centers is None:  # flat: one cell at the origin
-        centers = np.zeros((1, qx.shape[1]))
-        encoded = encoded.withColumn("cell", F.lit(0))
-    c_mat = np.asarray(centers, dtype=np.float64)
-    cd = (
-        (qx * qx).sum(1, keepdims=True)
-        - 2.0 * qx @ c_mat.T
-        + (c_mat * c_mat).sum(1)[None, :]
-    )
-    npb = min(nprobe, len(c_mat))
-    cell_of = np.argsort(cd, axis=1, kind="stable")[:, :npb].ravel()
-    q_of = np.repeat(np.arange(len(qids)), npb)
-    by_cell = np.argsort(cell_of, kind="stable")  # query order kept per cell
-    cells, starts = np.unique(cell_of[by_cell], return_index=True)
-    routed = dict(zip(cells.tolist(), np.split(q_of[by_cell], starts[1:])))
+    cols = [F.col(id_col).cast("long").alias("vec_id"), code_col, *aux]
+    if centers is None:  # flat: one cell holding every query
+        c_mat, routed = None, {0: np.arange(len(qids))}
+        scan = encoded.select(*cols)
+    else:
+        c_mat = np.asarray(centers, dtype=np.float64)
+        cd = (
+            (qx * qx).sum(1, keepdims=True)
+            - 2.0 * qx @ c_mat.T
+            + (c_mat * c_mat).sum(1)[None, :]
+        )
+        npb = min(nprobe, len(c_mat))
+        cell_of = np.argsort(cd, axis=1, kind="stable")[:, :npb].ravel()
+        q_of = np.repeat(np.arange(len(qids)), npb)
+        by_cell = np.argsort(cell_of, kind="stable")  # query order kept per cell
+        cells, starts = np.unique(cell_of[by_cell], return_index=True)
+        routed = dict(zip(cells.tolist(), np.split(q_of[by_cell], starts[1:])))
+        scan = encoded.where(F.col("cell").isin(list(routed))).select(*cols, "cell")
     shortlist_k = kth * oversample if rerank_with is not None else kth
     bc = spark.sparkContext.broadcast((qids, qx, c_mat, routed, shortlist_k, state))
-    scan = encoded.where(F.col("cell").isin(list(routed))).select(
-        F.col("vec_id").cast("long").alias("vec_id"), "cell", "codes", *aux
-    )
+    tile_bytes = _TILE_BYTES  # read on the driver, shipped in the closure
 
     def part(batches):
         import pyarrow as pa
 
         qids_, qx_, c_mat_, routed_, kth_, state_ = bc.value
+        flat = c_mat_ is None
         for batch in batches:
             if batch.num_rows == 0:
                 continue
-            ids, cell_ids = (
-                batch.column(c).to_numpy(zero_copy_only=False) for c in ("vec_id", "cell")
+            ids = batch.column("vec_id").to_numpy(zero_copy_only=False)
+            payload = [_arrow_matrix(batch.column(c)) for c in (code_col, *aux)]
+            cell_ids = None if flat else batch.column("cell").to_numpy(
+                zero_copy_only=False
             )
-            cols = [_list_col_matrix(batch.column("codes"), dtype=None)] + [
-                batch.column(c).to_numpy(zero_copy_only=False) for c in aux
-            ]
             out = []
-            for cell in np.unique(cell_ids):  # every scanned cell is routed
-                rows, q_idx = cell_ids == cell, routed_[int(cell)]
-                rq = qx_[q_idx] - c_mat_[cell][None, :]
-                d = score(state_, rq, *[c[rows] for c in cols])
-                cid = ids[rows]
-                idx = _topk_cols(d, cid, min(kth_, d.shape[1]))
-                out.append((
-                    np.repeat(qids_[q_idx], idx.shape[1]),
-                    cid[idx].ravel(),
-                    np.take_along_axis(d, idx, axis=1).ravel(),
-                ))
-            if out:
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array(np.concatenate(c)) for c in zip(*out)],
-                    names=["query_id", "vec_id", "dist"],
-                )
+            for cell in [0] if flat else np.unique(cell_ids):  # all routed
+                rows = slice(None) if flat else cell_ids == cell
+                cid, tile = ids[rows], [c[rows] for c in payload]
+                take = min(kth_, len(cid))
+                q_idx = routed_[int(cell)]
+                # query chunks whose (nq_c, n) float64 distance matrix
+                # stays under the tile budget
+                step = max(1, tile_bytes // (8 * len(cid)))
+                for s in range(0, len(q_idx), step):
+                    qi = q_idx[s : s + step]
+                    rq = qx_[qi] if flat else qx_[qi] - c_mat_[cell][None, :]
+                    d = score(state_, rq, *tile)
+                    idx = _topk_cols(d, cid, take)
+                    dist = (
+                        refine(state_, rq, idx, *tile) if refine is not None
+                        else np.take_along_axis(d, idx, axis=1)
+                    )
+                    out.append((np.repeat(qids_[qi], take), cid[idx].ravel(), dist.ravel()))
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(np.concatenate(c)) for c in zip(*out)],
+                names=["query_id", "vec_id", "dist"],
+            )
 
     partial = scan.mapInArrow(part, "query_id long, vec_id long, dist double")
     approx = topk_rows(

@@ -291,21 +291,27 @@ def test_ivfsq8_rerank_exact_and_deterministic(spark, sf_dir):
 
 # Integer points with every dimension spanning 0..255, each duplicated
 # 12× under shuffled ids: SQ8's bounds are then lo=0, scale=1, the IVF
-# cells are the points themselves, and every PQ/SQ8 distance is an
-# exactly representable integer, independent of BLAS blocking.
+# cells are the points themselves, and every PQ/SQ8/L2 distance is an
+# exactly representable integer, independent of BLAS blocking. The
+# Hamming scan stores one 64-bit code per point instead.
 _DUP_POINTS = np.array(
     [[0] * 8, [255] * 8, [10, 200, 37, 99, 128, 5, 250, 64]], dtype=np.float64
 )
+_DUP_CODES = [0, -1, 0x5A5A5A5A5A5A5A5A]
 _DUPS = 12
 
 
 @pytest.fixture(
     scope="module",
-    params=["pq_search", "ivfpq_search", "sq8_topk", "ivfsq8_search"],
+    params=[
+        "pq_search", "ivfpq_search", "sq8_topk", "ivfsq8_search",
+        "l2_topk_numpy", "hamming_topk_numpy", "cosine_topk_numpy",
+    ],
 )
 def quantized(request, spark):
-    """(encoded, search(encoded, queries, k, **kw), ids) for each search
-    of the quantized family over the duplicate corpus."""
+    """(encoded, search(encoded, queries, k, **kw), ids, name) for each
+    search on the scan skeleton — the quantized family and the exact
+    scans — over the duplicate corpus."""
     ids = np.random.default_rng(3).permutation(len(_DUP_POINTS) * _DUPS)
     vecs = spark.createDataFrame(
         [(int(v), _DUP_POINTS[j // _DUPS].tolist()) for j, v in enumerate(ids)],
@@ -329,12 +335,30 @@ def quantized(request, spark):
 
         def search(e, q, k, **kw):
             return S.sq8_topk(e, lo, scale, q, k=k, **kw)
-    else:
+    elif name == "ivfsq8_search":
         enc, cents, lo, scale = pq.ivfsq8_build(vecs, n_clusters=3, seed=7)
 
         def search(e, q, k, **kw):
             return pq.ivfsq8_search(e, cents, lo, scale, q, kth=k, nprobe=3, **kw)
-    return enc.localCheckpoint(), search, ids
+    elif name == "hamming_topk_numpy":
+        enc = spark.createDataFrame(
+            [(int(v), _DUP_CODES[j // _DUPS]) for j, v in enumerate(ids)],
+            "vec_id long, code long",
+        )
+        # query j flips bit 0 of code j: Hamming distance 1 from point j
+        flipped = F.array(*[F.lit(c ^ 1).cast("long") for c in _DUP_CODES])
+
+        def search(e, q, k, **kw):
+            q = q.select("query_id", F.element_at(
+                flipped, F.col("query_id").cast("int") + 1
+            ).alias("query_vec"))
+            return S.hamming_topk_numpy(e, q, k=k, **kw)
+    else:
+        enc, scan = vecs, getattr(S, name)
+
+        def search(e, q, k, **kw):
+            return scan(e, q, k=k, **kw)
+    return enc.localCheckpoint(), search, ids, name
 
 
 def _dup_queries(spark, n=2):
@@ -348,37 +372,69 @@ def _dup_queries(spark, n=2):
     return spark.createDataFrame(rows, "query_id long, query_vec array<double>")
 
 
+def _rows(search, enc, queries, k=5):
+    return sorted(tuple(r) for r in search(enc, queries, k).collect())
+
+
 def test_empty_query_batch(spark, quantized):
-    """An empty query batch returns the empty 4-column frame."""
-    enc, search, _ = quantized
+    """An empty query batch returns the empty 4-column frame (cosine's
+    third column is its similarity)."""
+    enc, search, _, name = quantized
     empty = spark.createDataFrame([], "query_id long, query_vec array<double>")
     out = search(enc, empty, 5)
-    assert out.columns == ["query_id", "vec_id", "dist", "rank"]
+    score = "sim" if name == "cosine_topk_numpy" else "dist"
+    assert out.columns == ["query_id", "vec_id", score, "rank"]
     assert out.count() == 0
 
 
 def test_search_bounds_driver_collect(spark, quantized):
     """The front door never materializes an oversized query batch on
-    the driver: above max_driver_queries it raises a clear error
-    BEFORE collecting the batch."""
-    enc, search, _ = quantized
+    the driver: above max_driver_queries a quantized search raises a
+    clear error BEFORE collecting the batch, and an exact scan (a bulk
+    fallback) plans the distributed `knn_exact` instead (its rows:
+    test_knn_exact::test_exact_scan_overflow_falls_back_distributed)."""
+    enc, search, _, name = quantized
+    queries = _dup_queries(spark, 3)
+    if name.endswith("_topk_numpy"):
+        got = search(enc, queries, 5, max_driver_queries=2)
+        assert "MapInArrow" not in got._jdf.queryExecution().optimizedPlan().toString()
+        return
     with pytest.raises(ValueError, match="max_driver_queries"):
-        search(enc, _dup_queries(spark, 3), 5, max_driver_queries=2)
+        search(enc, queries, 5, max_driver_queries=2)
 
 
 def test_partial_topk_breaks_ties_by_vec_id(spark, quantized):
     """With more exact duplicates than k, the top-k is the k lowest ids
     of the tied group, at every partitioning of the codes: the partial
-    top-k selects by (dist, vec_id), the order of the global merge."""
-    enc, search, ids = quantized
+    top-k selects by (dist, vec_id), the order of the global merge.
+    Cosine has no distance of 1.0: its tied group is the copies of the
+    point its top hit belongs to."""
+    enc, search, ids, name = quantized
     queries = _dup_queries(spark)
-
-    def rows(e):
-        return sorted(tuple(r) for r in search(e, queries, 5).collect())
-
-    one = rows(enc.coalesce(1))
-    assert one == rows(enc.repartition(4, "vec_id"))
+    one = _rows(search, enc.coalesce(1), queries)
+    assert one == _rows(search, enc.repartition(4, "vec_id"), queries)
+    groups = ids.reshape(len(_DUP_POINTS), _DUPS)
     for j in range(2):
-        got = [(r[3], r[1], r[2]) for r in one if r[0] == j]
-        lowest = sorted(ids[j * _DUPS : (j + 1) * _DUPS])[:5]
-        assert sorted(got) == [(i + 1, int(v), 1.0) for i, v in enumerate(lowest)]
+        got = sorted((r[3], r[1], r[2]) for r in one if r[0] == j)
+        if name == "cosine_topk_numpy":
+            group = next(g for g in groups if got[0][1] in g)
+            assert [v for _, v, _ in got] == sorted(group)[:5]
+            continue
+        lowest = sorted(groups[j])[:5]
+        assert got == [(i + 1, int(v), 1.0) for i, v in enumerate(lowest)]
+
+
+@pytest.mark.parametrize(
+    "quantized", ["l2_topk_numpy", "ivfsq8_search"], indirect=True
+)
+def test_tile_budget_keeps_rows(spark, quantized, monkeypatch):
+    """The skeleton scores each (Arrow batch, cell) in query chunks
+    under `pq._TILE_BYTES`; a budget that forces one query per chunk
+    returns exactly the rows of the default budget (an exact and a
+    quantized scorer; cosine's float sims may move by an ulp with the
+    matmul's shape)."""
+    enc, search, _, _ = quantized
+    queries = _dup_queries(spark, 3)
+    want = _rows(search, enc, queries)
+    monkeypatch.setattr(pq, "_TILE_BYTES", 1)
+    assert _rows(search, enc, queries) == want

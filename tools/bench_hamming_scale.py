@@ -3,10 +3,11 @@ iris-code domain (linear_db.rs stores raw codes and eval_distances every
 one), measured at 100M codes.
 
 The scan is `hamming_topk_numpy`: queries broadcast once; every Arrow
-batch of codes is XORed against all queries at once and popcounted via
-the byte LUT; each partition emits a tie-exact local top-k and a Window
-merges. Memory is bounded by the Arrow batch size regardless of n, so
-the same plan runs at any corpus size — per-batch cost is O(batch × nq).
+batch of codes is XORed against the queries (in chunks under the scan
+skeleton's tile budget) and popcounted via the 16-bit LUT; each batch
+emits a tie-exact partial top-k and a Window merges. Memory is bounded
+by the Arrow batch size and the tile budget regardless of n, so the
+same plan runs at any corpus size — per-batch cost is O(batch × nq).
 
 Usage: python tools/bench_hamming_scale.py [n] [n_queries]
 Prints one JSON line for NOTES.md.
