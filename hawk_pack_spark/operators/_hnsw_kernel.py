@@ -1,4 +1,4 @@
-"""Partition-local HNSW kernel: numpy and Python, runs inside applyInPandas.
+"""Partition-local HNSW kernel: numpy and Python, run by Spark Python tasks.
 
 Implements the HNSW algorithm (Malkov & Yashunin 2016, arXiv:1603.09320,
 cited by the reference's README) for one index shard held in memory.
@@ -483,8 +483,71 @@ def index_from_arrays(
     neighbor_heuristic: bool = True,
     frozen: bool = False,
 ) -> LocalHNSW:
-    """Rehydrate a LocalHNSW from stored parallel-array adjacency (global
-    ids → local indices).
+    """Rehydrate a LocalHNSW from stored per-node adjacency lists (one
+    ``e_layer``/``e_dst``/``e_dist`` list per node, global ids): a thin
+    adapter that flattens the lists and calls `index_from_flat`, where
+    the semantics (entry rule, ``frozen``, the whole-shard check) are
+    documented."""
+    counts = np.fromiter((len(x) for x in e_dsts), dtype=np.int64, count=len(ids))
+
+    def flat(lists: list, dtype) -> np.ndarray:
+        parts = [np.asarray(x, dtype=dtype) for x in lists if len(x)]
+        return np.concatenate(parts) if parts else np.empty(0, dtype=dtype)
+
+    return index_from_flat(
+        ids, data, metric_name, params, counts,
+        flat(e_layers, np.int64), flat(e_dsts, np.int64), flat(e_dists, np.float64),
+        layers=layers, neighbor_heuristic=neighbor_heuristic, frozen=frozen,
+    )
+
+
+def _local_ids(ids: np.ndarray, dst: np.ndarray) -> np.ndarray:
+    """Map global edge destinations to local indices (positions in
+    ``ids``); a destination outside ``ids`` means a split shard."""
+    order = np.argsort(ids, kind="stable")
+    sorted_ids = ids[order]
+    pos = np.searchsorted(sorted_ids, dst)
+    ok = (pos < len(ids)) & (sorted_ids[np.minimum(pos, len(ids) - 1)] == dst)
+    if not bool(ok.all()):
+        bad = int(dst[~ok][0])
+        raise ValueError(
+            f"edge destination vec_id={bad} is not in this slice "
+            "of the index: the partition does not contain its whole "
+            "shard. Index partitions must hold complete shards — after "
+            "reading a saved index from parquet (file-split "
+            "partitions), repartition(num_shards, 'shard') before "
+            "searching."
+        )
+    return order[pos]
+
+
+def _runs_ascending(lay, src, dist, dst) -> bool:
+    """True when every (layer, src) run is (dist, dst)-ascending — O(E),
+    no sort. NaN distances fail the check."""
+    same = (lay[1:] == lay[:-1]) & (src[1:] == src[:-1])
+    d0, d1 = dist[:-1], dist[1:]
+    ok = (d0 < d1) | ((d0 == d1) & (dst[:-1] <= dst[1:]))
+    return bool((ok | ~same).all())
+
+
+def index_from_flat(
+    ids: np.ndarray,
+    data: np.ndarray,
+    metric_name: str,
+    params: HawkParams,
+    counts: np.ndarray,
+    e_layer: np.ndarray,
+    e_dst: np.ndarray,
+    e_dist: np.ndarray,
+    layers: np.ndarray | None = None,
+    neighbor_heuristic: bool = True,
+    frozen: bool = False,
+) -> LocalHNSW:
+    """Rehydrate a LocalHNSW from flat stored adjacency: ``counts[i]``
+    edges of node ``i`` (local index = position in ``ids``) come next
+    in the flat ``e_layer``/``e_dst`` (global ids)/``e_dist`` arrays —
+    exactly an Arrow list column's values and offsets, so a serving
+    task reads them without materializing per-row lists.
 
     ``layers`` is the stored per-node assigned max layer (the index
     DataFrame's ``layer`` column). The entry point is the lowest id at
@@ -495,6 +558,15 @@ def index_from_arrays(
     the layer is derived from adjacency presence, which can under-report
     exactly that case.
 
+    Each (layer, node) neighbor run must end up (dist, local dst)-
+    ascending. Every writer already stores its runs in that order
+    (``adjacency_arrays`` emits the kernel's sorted lists, the Spark
+    assembly ``array_sort``s (layer, dist, dst)), so a stable sort by
+    layer alone yields the final order; an O(E) check confirms it, and
+    only a failed check (hand-written or shuffled adjacency, NaN
+    distances) pays the full (layer, src, dist, dst) lexsort. The result
+    is identical either way.
+
     ``frozen=True`` builds a SEARCH-ONLY index: adjacency stays in
     numpy CSR form (one indptr/nbrs pair per layer, dist-ascending per
     node) and the per-node tuple lists — the measured hot cost of
@@ -502,77 +574,48 @@ def index_from_arrays(
     this; anything that mutates or re-serializes the graph (insert,
     delete/repair, to_links) needs the default dict form. Requires
     ``layers`` (the entry point cannot be derived from CSR presence)."""
-    metric = Metric(metric_name, data)
-    index = LocalHNSW(metric, params, neighbor_heuristic=neighbor_heuristic)
-    # Vectorized rehydration (the serving hot path: measured 74ms/shard
-    # interpreted vs ~6ms of actual searching at the 10M-ladder shape).
-    # Flatten the per-node ragged adjacency, map global→local ids with
-    # one searchsorted, lexsort by (layer, src, dist, dst) and slice the
-    # groups back into the kernel's sorted neighbor lists.
+    if frozen and layers is None:
+        raise ValueError("frozen=True requires the stored layers column")
+    index = LocalHNSW(
+        Metric(metric_name, data), params, neighbor_heuristic=neighbor_heuristic
+    )
     n_nodes = len(ids)
-    lens = np.fromiter((len(x) for x in e_dsts), dtype=np.int64, count=n_nodes)
-    total = int(lens.sum())
-    if total:
-        flat_src = np.repeat(np.arange(n_nodes, dtype=np.int64), lens)
-        flat_lay = np.concatenate([np.asarray(x, dtype=np.int64) for x in e_layers if len(x)])
-        flat_dst = np.concatenate([np.asarray(x, dtype=np.int64) for x in e_dsts if len(x)])
-        flat_dist = np.concatenate([np.asarray(x, dtype=np.float64) for x in e_dists if len(x)])
-        order = np.argsort(ids, kind="stable")
-        sorted_ids = ids[order]
-        pos = np.searchsorted(sorted_ids, flat_dst)
-        ok = (pos < n_nodes) & (sorted_ids[np.minimum(pos, n_nodes - 1)] == flat_dst)
-        if not bool(ok.all()):
-            bad = int(flat_dst[~ok][0])
-            raise ValueError(
-                f"edge destination vec_id={bad} is not in this slice "
-                "of the index: the partition does not contain its whole "
-                "shard. Index partitions must hold complete shards — after "
-                "reading a saved index from parquet (file-split "
-                "partitions), repartition(num_shards, 'shard') before "
-                "searching."
-            )
-        flat_dst_local = order[pos]
-        perm = np.lexsort((flat_dst_local, flat_dist, flat_src, flat_lay))
-        flat_lay = flat_lay[perm]
-        flat_src = flat_src[perm]
-        flat_dist = flat_dist[perm]
-        flat_dst_local = flat_dst_local[perm]
-        if frozen:
-            if layers is None:
-                raise ValueError("frozen=True requires the stored layers column")
-            index.csr = {}
-            for lc in np.unique(flat_lay).tolist():
-                m = flat_lay == lc
-                counts = np.bincount(flat_src[m], minlength=n_nodes)
-                indptr = np.zeros(n_nodes + 1, dtype=np.int64)
-                np.cumsum(counts, out=indptr[1:])
-                index.csr[int(lc)] = (indptr, flat_dst_local[m])
-        else:
-            # group boundaries on the (layer, src) composite
-            key = flat_lay * n_nodes + flat_src
-            starts = np.flatnonzero(np.r_[True, key[1:] != key[:-1]])
-            bounds = np.r_[starts, total]
-            d_list = flat_dist.tolist()
-            l_list = flat_dst_local.tolist()
-            for gi in range(len(starts)):
-                a, b = bounds[gi], bounds[gi + 1]
-                index.adj.setdefault(int(flat_lay[a]), {})[int(flat_src[a])] = list(
-                    zip(d_list[a:b], l_list[a:b])
-                )
-    elif frozen:
-        if layers is None:
-            raise ValueError("frozen=True requires the stored layers column")
+    src = np.repeat(np.arange(n_nodes, dtype=np.int64), counts)
+    dst = _local_ids(ids, e_dst)
+    perm = np.argsort(e_layer, kind="stable")
+    lay, src, dist, dst = e_layer[perm], src[perm], e_dist[perm], dst[perm]
+    if not _runs_ascending(lay, src, dist, dst):
+        perm = np.lexsort((dst, dist, src, lay))
+        lay, src, dist, dst = lay[perm], src[perm], dist[perm], dst[perm]
+    if frozen:
+        # one CSR per run of equal layer (lay is sorted)
         index.csr = {}
-    top_layer, entry = -1, None
-    for local in range(len(ids)):
+        for lc in np.unique(lay).tolist():
+            a, b = np.searchsorted(lay, [lc, lc + 1]).tolist()
+            indptr = np.zeros(n_nodes + 1, dtype=np.int64)
+            np.cumsum(np.bincount(src[a:b], minlength=n_nodes), out=indptr[1:])
+            index.csr[int(lc)] = (indptr, dst[a:b])
+    elif len(lay):
+        # one neighbor list per run of equal (layer, src)
+        new_run = (lay[1:] != lay[:-1]) | (src[1:] != src[:-1])
+        starts = np.flatnonzero(np.r_[True, new_run])
+        bounds = np.r_[starts, len(lay)].tolist()
+        d_list, l_list = dist.tolist(), dst.tolist()
+        lay_l, src_l = lay[starts].tolist(), src[starts].tolist()
+        for gi in range(len(starts)):
+            a, b = bounds[gi], bounds[gi + 1]
+            index.adj.setdefault(lay_l[gi], {})[src_l[gi]] = list(
+                zip(d_list[a:b], l_list[a:b])
+            )
+    if n_nodes:
         if layers is not None:
-            node_top = int(layers[local])
+            node_top = np.asarray(layers, dtype=np.int64)
         else:
             # a node "is on" layer lc if it has a queue there (layer 0 holds all)
-            node_top = max([lc for lc in index.adj if local in index.adj[lc]], default=0)
-        gid = int(ids[local])
-        if node_top > top_layer or (node_top == top_layer and (entry is None or gid < entry[1])):
-            top_layer, entry = node_top, (local, gid)
-    if entry is not None:
-        index.entry, index.entry_layer = entry[0], top_layer
+            node_top = np.zeros(n_nodes, dtype=np.int64)
+            np.maximum.at(node_top, src, lay)
+        top = int(node_top.max())
+        on_top = np.flatnonzero(node_top == top)
+        index.entry = int(on_top[np.argmin(ids[on_top])])
+        index.entry_layer = top
     return index

@@ -12,29 +12,30 @@ Build: hash-shard vectors, then one `applyInPandas` builds each shard's
 graph independently (sequential insertion inside the shard — the
 reference engine is serial by design; shards give the parallelism).
 
-Search has two physical shapes over the same per-shard kernel call
-(`_search_shard`: rehydrate the shard as a frozen CSR index, stage the
-queries after its vectors, one ``LocalHNSW.search_batch``), each
-followed by a Window top-k merge that shuffles only k rows per
-(query, shard):
+Search has two physical shapes over the same Arrow-native per-shard
+kernel call (`_search_shard`: rehydrate the shard from its list
+columns' flat values and offsets as a frozen CSR index, stage the
+queries after its vectors, one ``LocalHNSW.search_batch``):
 
 - `search` (cogroup, analytical): queries are replicated to every shard
-  (crossJoin) or to their nprobe nearest shards (routed), and one
-  `cogroup().applyInPandas` searches each shard after repartitioning
-  the index by shard.
+  (crossJoin) or to their nprobe nearest shards (routed), one
+  `cogroup().applyInArrow` searches each shard after repartitioning
+  the index by shard, and a Window top-k merge shuffles only k rows per
+  (query, shard). Nothing collects to the driver.
 - `search_serving` (serving): the bounded query batch is collected,
-  routed driver-side against build-time centroids and broadcast; one
-  `mapInPandas` pass over the unmoved index, filtered to the probed
-  shards and coalesced to one Python task per core, searches them.
-  `ann_search` is the front door that picks between it and an exact
-  scan.
+  routed driver-side against build-time centroids and broadcast; ONE
+  `mapInArrow` stage over the unmoved index, filtered to the probed
+  shards and coalesced to one Python task per core, searches them and
+  keeps each query's top-k per task; the driver collects those rows
+  and takes the final top-k in numpy. `ann_search` is the front door
+  that picks between it and an exact scan.
 
 ``search_batch`` runs the compiled batch beam search (`_native_hnsw.c`)
 for l2_sq and hamming, and the Python kernel for every other metric.
 
 At 100 TB the same plan holds: shards are the unit of placement (a few
-hundred MB each), the per-shard kernel is CPU-bound numpy, and nothing
-ever collects to the driver.
+hundred MB each) and the per-shard kernel is CPU-bound numpy. Only the
+serving path collects, and only its bounded batch's top-k rows.
 
 Determinism: layer assignment is splitmix64(vec_id) → geometric, so the
 graph is identical under any partitioning or insertion batching; entry
@@ -48,6 +49,7 @@ import os
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -60,10 +62,15 @@ INDEX_SCHEMA = (
     "e_layer array<int>, e_dst array<long>, e_dist array<double>"
 )
 
-SEARCH_SCHEMA = "shard int, query_id long, vec_id long, dist double"
+# per-shard (and per-task) hits; the merged result adds the 1-based rank
+SEARCH_SCHEMA = "query_id long, vec_id long, dist double"
+RESULT_SCHEMA = "query_id long, vec_id long, dist double, rank int"
 
 # queries a serving surface collects driver-side in one batch
 MAX_DRIVER_QUERIES = 100_000
+
+# the index columns one shard search reads, besides its payload column
+_SHARD_COLS = ["shard", "vec_id", "layer", "e_layer", "e_dst", "e_dist"]
 
 
 def _payload(pdf: pd.DataFrame, metric: str) -> np.ndarray:
@@ -76,36 +83,80 @@ def _stack_payload(a: np.ndarray, b: np.ndarray, metric: str) -> np.ndarray:
     return np.concatenate([a, b]) if metric == "hamming" else np.vstack([a, b])
 
 
+def _payload_col(metric: str) -> str:
+    return "code" if metric == "hamming" else "vec"
+
+
+def _flat(col: pa.ChunkedArray) -> tuple[np.ndarray, np.ndarray]:
+    """(per-row lengths, flat values) of an Arrow list column, read from
+    its offsets and child values — no per-row Python objects."""
+    # the usual single chunk is read in place; combining would copy it
+    arr = col.chunk(0) if col.num_chunks == 1 else col.combine_chunks()
+    offs = arr.offsets.to_numpy()
+    values = arr.values.slice(offs[0], offs[-1] - offs[0])
+    return np.diff(offs), values.to_numpy(zero_copy_only=False)
+
+
+def _arrow_payload(rows: pa.Table, metric: str) -> np.ndarray:
+    """Kernel payload of Arrow rows: uint64 codes (stored as int64) for
+    hamming, an (n, dim) float64 matrix otherwise."""
+    if metric == "hamming":
+        return rows.column("code").to_numpy().view(np.uint64)
+    lens, values = _flat(rows.column("vec"))
+    return values.astype(np.float64, copy=False).reshape(len(lens), -1)
+
+
 def _search_shard(
-    pdf: pd.DataFrame,
+    rows: pa.Table,
     q_ids: np.ndarray,
     q_data: np.ndarray,
     metric: str,
     params: HawkParams,
     k: int,
     ef_search: int | None,
-) -> pd.DataFrame:
-    """One shard's kNN for a query batch: rehydrate the shard's rows as a
-    frozen (search-only) index with the queries staged after the stored
-    vectors — the reference's prepare_query id space — and run
-    ``search_batch``. Returns SEARCH_SCHEMA columns."""
-    pdf = pdf.sort_values("vec_id").reset_index(drop=True)
-    ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-    full = _stack_payload(_payload(pdf, metric), q_data, metric)
-    index = K.index_from_arrays(
-        ids, full, metric, params,
-        pdf["e_layer"].tolist(), pdf["e_dst"].tolist(), pdf["e_dist"].tolist(),
-        layers=pdf["layer"].to_numpy(dtype=np.int32),
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """One shard's kNN for a query batch. ``rows`` are the shard's index
+    rows ordered by vec_id; they are rehydrated from the list columns'
+    flat values and offsets as a frozen (search-only) index with the
+    queries staged after the stored vectors — the reference's
+    prepare_query id space — and ``search_batch`` runs once. Returns
+    (query_id, vec_id, dist) arrays, at most k hits per query."""
+    ids = rows.column("vec_id").to_numpy()
+    counts, e_layer = _flat(rows.column("e_layer"))
+    _, e_dst = _flat(rows.column("e_dst"))
+    _, e_dist = _flat(rows.column("e_dist"))
+    index = K.index_from_flat(
+        ids, _stack_payload(_arrow_payload(rows, metric), q_data, metric),
+        metric, params, counts, e_layer, e_dst, e_dist,
+        layers=rows.column("layer").to_numpy(),
         frozen=True,  # search-only: CSR rehydration, no tuple lists
     )
     n = len(ids)
     local, dist = index.search_batch(np.arange(n, n + len(q_ids)), k, ef_search)
     hit = local >= 0
-    return pd.DataFrame({
-        "shard": np.full(int(hit.sum()), int(pdf["shard"].iloc[0]), dtype=np.int32),
-        "query_id": np.repeat(np.asarray(q_ids, dtype=np.int64), hit.sum(axis=1)),
-        "vec_id": ids[local[hit]],
-        "dist": dist[hit],
+    return np.repeat(q_ids, hit.sum(axis=1)), ids[local[hit]], dist[hit]
+
+
+def _topk(
+    qid: np.ndarray, vid: np.ndarray, dist: np.ndarray, k: int
+) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
+    """Each query's k best hits by (dist, vec_id) — the Window merge's
+    order — with their 1-based rank."""
+    order = np.lexsort((vid, dist, qid))
+    qid, vid, dist = qid[order], vid[order], dist[order]
+    starts = np.flatnonzero(np.r_[True, qid[1:] != qid[:-1]])
+    run_start = np.repeat(starts, np.diff(np.r_[starts, len(qid)]))
+    rank = np.arange(1, len(qid) + 1) - run_start
+    keep = rank <= k
+    return qid[keep], vid[keep], dist[keep], rank[keep]
+
+
+def _hits(qid: np.ndarray, vid: np.ndarray, dist: np.ndarray) -> pa.Table:
+    """SEARCH_SCHEMA rows as an Arrow table."""
+    return pa.table({
+        "query_id": pa.array(qid, pa.int64()),
+        "vec_id": pa.array(vid, pa.int64()),
+        "dist": pa.array(dist, pa.float64()),
     })
 
 
@@ -511,18 +562,29 @@ def search_serving(
     where the index is long-lived and queries are the small side. Here
     the query batch is collected (at most ``MAX_DRIVER_QUERIES`` rows;
     a larger batch raises ValueError), routed driver-side against
-    build-time centroids, and broadcast; one `mapInPandas` pass over the
+    build-time centroids, and broadcast; one `mapInArrow` pass over the
     index searches each shard's routed queries with ZERO index shuffle,
     and a JVM-side `shard IN (probed…)` filter skips Arrow transfer of
     unprobed shards entirely. Per-query cost is nprobe × O(log shard) —
     independent of total shard count AND free of the per-call O(n)
     setup the cogroup path pays.
 
-    The filtered scan is coalesced to at most ``defaultParallelism``
-    partitions — one Python task per core, since every Python task pays
-    a fixed worker cost whatever its size — and each task runs one
-    ``LocalHNSW.search_batch`` call per shard (the compiled batch beam
-    search for l2_sq/hamming, the Python kernel for other metrics).
+    The filtered scan reads only the columns a shard search needs and
+    is coalesced to at most ``defaultParallelism`` partitions — one
+    Python task per core, since every Python task pays a fixed worker
+    cost whatever its size. Each task orders its rows by (shard,
+    vec_id), runs one ``LocalHNSW.search_batch`` call per shard (the
+    compiled batch beam search for l2_sq/hamming, the Python kernel for
+    other metrics) and keeps each query's top-k across its shards by
+    (dist, vec_id). The search therefore runs as ONE Spark stage, when
+    this function is called: the driver collects at most
+    nq · k · min(probes per query, tasks) rows — ≤ 20 000 for a
+    500-query batch at k=10, nprobe 6, and ≤ 6 M rows (≈144 MB) at
+    ``MAX_DRIVER_QUERIES`` queries, k=10, nprobe 6 — takes the final
+    (dist, vec_id) top-k and rank in numpy, and returns them as a local
+    (already computed) DataFrame: (query_id long, vec_id long,
+    dist double, rank int), the same rows and types as the Window
+    merge of `search`.
 
     Requirements: index partitions must contain whole shards (true for
     ``build_index`` output and anything ``repartition(n, "shard")``-ed
@@ -543,8 +605,9 @@ def search_serving(
         qn = _normalize_vectors(
             queries, query_id, query_col, metric, out_id="query_id"
         )
-        payload = "code" if metric == "hamming" else "vec"
-        batch = _collect_query_batch(qn, "query_id", payload, MAX_DRIVER_QUERIES)
+        batch = _collect_query_batch(
+            qn, "query_id", _payload_col(metric), MAX_DRIVER_QUERIES
+        )
         if batch is None:
             raise ValueError(
                 f"query batch exceeds max_driver_queries={MAX_DRIVER_QUERIES}: "
@@ -560,10 +623,8 @@ def search_serving(
                 centroids = cached_centroids(index_df, metric)
             routed = _route_batch(q_data, centroids, metric, nprobe_shards)
     if len(q_ids) == 0:
-        return spark.createDataFrame(
-            [], "query_id long, vec_id long, dist double, rank int"
-        )
-    scan = index_df
+        return spark.createDataFrame([], RESULT_SCHEMA)
+    scan = index_df.select(*_SHARD_COLS, _payload_col(metric))
     if routed is not None:
         scan = scan.where(F.col("shard").isin([int(s) for s in routed]))
     # one Python task per core: coalescing only merges partitions, so a
@@ -576,31 +637,38 @@ def search_serving(
     def run(batches):
         K.CUSTOM_BATCH.update(_custom)
         q_ids_, q_data_, routed_ = bc.value
-        # Arrow batches can split a shard: accumulate the partition
-        # (bounded — a partition holds whole shards) before grouping.
-        parts = [pdf for pdf in batches if not pdf.empty]
+        # Arrow batches can split a shard: order the whole partition
+        # (bounded — a partition holds whole shards) before slicing it
+        # into one run of rows per shard.
+        parts = [b for b in batches if b.num_rows]
         if not parts:
             return
-        whole = pd.concat(parts, ignore_index=True)
-        for shard, pdf in whole.groupby("shard", sort=False):
+        rows = pa.Table.from_batches(parts).sort_by(
+            [("shard", "ascending"), ("vec_id", "ascending")]
+        )
+        shard = rows.column("shard").to_numpy()
+        cuts = np.flatnonzero(shard[1:] != shard[:-1]) + 1
+        found = []
+        for a, b in zip(np.r_[0, cuts].tolist(), np.r_[cuts, len(shard)].tolist()):
             sel = (
                 np.arange(len(q_ids_)) if routed_ is None
-                else routed_.get(int(shard), [])
+                else routed_.get(int(shard[a]), [])
             )
             if len(sel):
-                yield _search_shard(
-                    pdf, q_ids_[sel], q_data_[sel], metric, params, k, ef_search
-                )
+                found.append(_search_shard(
+                    rows.slice(a, b - a), q_ids_[sel], q_data_[sel],
+                    metric, params, k, ef_search,
+                ))
+        if found:
+            qid, vid, dist, _ = _topk(*(np.concatenate(c) for c in zip(*found)), k)
+            yield from _hits(qid, vid, dist).to_batches()
 
-    per_shard = scan.mapInPandas(run, SEARCH_SCHEMA)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("dist").asc(), F.col("vec_id").asc()
+    hits = scan.mapInArrow(run, SEARCH_SCHEMA).toArrow()
+    qid, vid, dist, rank = _topk(
+        *(hits.column(c).to_numpy() for c in ("query_id", "vec_id", "dist")), k
     )
-    return (
-        per_shard.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "vec_id", "dist", "rank")
-    )
+    out = _hits(qid, vid, dist).append_column("rank", pa.array(rank, pa.int32()))
+    return spark.createDataFrame(out, RESULT_SCHEMA)
 
 
 def search(
@@ -615,8 +683,12 @@ def search(
     num_shards: int | None = None,
     nprobe_shards: int | None = None,
 ) -> DataFrame:
-    """kNN over the sharded index: per-shard beam search (cogroup kernel),
-    then a global top-k merge. Returns (query_id, vec_id, dist, rank).
+    """kNN over the sharded index: per-shard beam search (one
+    `cogroup().applyInArrow` task per shard, the same `_search_shard` as
+    `search_serving`), then a global Window top-k merge by (dist,
+    vec_id). Returns a lazy (query_id, vec_id, dist, rank) DataFrame.
+    This is the distributed bulk path: the query side is never
+    collected, so it has no driver bound and keeps the shuffle merge.
 
     ``nprobe_shards``: route each query to only its n nearest shard
     centroids (IVF-style coarse routing) instead of fanning out to every
@@ -633,6 +705,7 @@ def search(
         num_shards = 1 + (index_df.agg(F.max("shard")).collect()[0][0] or 0)
     shard_ids = list(range(num_shards))
     qn = _normalize_vectors(queries, query_id, query_col, metric, out_id="query_id")
+    payload = _payload_col(metric)
     if nprobe_shards is not None and nprobe_shards < num_shards:
         # materialize the centroid table (num_shards rows) — breaks the
         # lineage between index_df and the routed queries (the cogroup
@@ -648,10 +721,9 @@ def search(
                 [(r.shard, r.c_vec) for r in cent_rows],
                 "shard int, c_vec array<double>",
             )
-        q_payload = "code" if metric == "hamming" else "vec"
         c_payload = "c_code" if metric == "hamming" else "c_vec"
         scored = qn.crossJoin(F.broadcast(cents)).withColumn(
-            "_cdist", distance_expr(metric, F.col(q_payload), F.col(c_payload))
+            "_cdist", distance_expr(metric, F.col(payload), F.col(c_payload))
         )
         routed = topk_rows(
             scored, ["query_id"], "_cdist", nprobe_shards, tie_cols=["shard"],
@@ -666,21 +738,26 @@ def search(
 
     _custom = dict(K.CUSTOM_BATCH)
 
-    def search_shard(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
+    def search_shard(left: pa.Table, right: pa.Table) -> pa.Table:
         K.CUSTOM_BATCH.update(_custom)
-        if left.empty or right.empty:
-            return pd.DataFrame(columns=["shard", "query_id", "vec_id", "dist"])
-        return _search_shard(
-            left, right["query_id"].to_numpy(dtype=np.int64),
-            _payload(right, metric), metric, params, k, ef_search,
-        )
+        if left.num_rows == 0 or right.num_rows == 0:
+            return _hits(np.empty(0, np.int64), np.empty(0, np.int64), np.empty(0))
+        return _hits(*_search_shard(
+            left.sort_by("vec_id"), right.column("query_id").to_numpy(),
+            _arrow_payload(right, metric), metric, params, k, ef_search,
+        ))
 
     n_shards = max(len(shard_ids), 1)
     per_shard = (
-        index_df.repartition(n_shards, "shard")
+        index_df.select(*_SHARD_COLS, payload)
+        .repartition(n_shards, "shard")
         .groupBy("shard")
-        .cogroup(qrep.repartition(n_shards, "shard").groupBy("shard"))
-        .applyInPandas(search_shard, SEARCH_SCHEMA)
+        .cogroup(
+            qrep.select("shard", "query_id", payload)
+            .repartition(n_shards, "shard")
+            .groupBy("shard")
+        )
+        .applyInArrow(search_shard, SEARCH_SCHEMA)
     )
     w = Window.partitionBy("query_id").orderBy(F.col("dist").asc(), F.col("vec_id").asc())
     return (
@@ -812,8 +889,9 @@ def ann_search(
     # materialize it on the driver (VERDICT r5 #7). Overflow falls back
     # to the cogroup `search` (fully distributed, zero driver
     # materialization).
-    payload = "code" if metric == "hamming" else "vec"
-    batch = _collect_query_batch(qn, "query_id", payload, max_driver_queries)
+    batch = _collect_query_batch(
+        qn, "query_id", _payload_col(metric), max_driver_queries
+    )
     if batch is None:
         if decision_out is not None:
             decision_out.update(
@@ -828,9 +906,7 @@ def ann_search(
     q_ids, q_data = batch
     n_queries = len(q_ids)
     if not n_queries:
-        return spark.createDataFrame(
-            [], "query_id long, vec_id long, dist double, rank int"
-        )
+        return spark.createDataFrame([], RESULT_SCHEMA)
     if nprobe_shards is None:
         routed = None
         probed_fraction = 1.0
@@ -976,9 +1052,7 @@ def insert_batch(
         # the batch was split into micro-batches. Near-dups (0 < dist <=
         # threshold) across shards remain the same race the reference's
         # concurrent insert tasks admit (hawk_searcher.rs tokio tasks).
-        wdup = Window.partitionBy(
-            "code" if metric == "hamming" else "vec"
-        ).orderBy(F.col("vec_id").asc())
+        wdup = Window.partitionBy(_payload_col(metric)).orderBy(F.col("vec_id").asc())
         prepped = (
             prepped.withColumn("_dup_rn", F.row_number().over(wdup))
             .where(F.col("_dup_rn") == 1)
@@ -1210,7 +1284,7 @@ def delete_from_index(index_df: DataFrame, delete_ids: DataFrame,
         out_of_del = all_edges.join(del_dst, "dst", "left_anti").select(
             "shard", "layer", F.col("src").alias("mid"), "dst"
         )
-        payload = "code" if metric == "hamming" else "vec"
+        payload = _payload_col(metric)
         # bridge endpoints can be CALM survivors (a deleted node's
         # out-neighbor needn't point back), so payloads come from every
         # touched-shard survivor, not just the affected set

@@ -98,10 +98,11 @@ def q_hnsw_serving_search_l2(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # each search result is read by 2-3 branches below (summary + both
     # exceptAll directions); materialize the bounded (10 queries x k)
-    # frames once so each search executes once, not per branch
+    # cogroup frames once so each search executes once, not per branch
+    # (search_serving already returns a computed local frame)
     serv = hnsw.search_serving(
         index, queries, k=10, metric="l2_sq", params=_HNSW_PARAMS
-    ).localCheckpoint()
+    )
     cog = hnsw.search(
         index, queries, k=10, metric="l2_sq", params=_HNSW_PARAMS
     ).localCheckpoint()
@@ -109,7 +110,7 @@ def q_hnsw_serving_search_l2(spark: SparkSession, sf_dir: str) -> DataFrame:
     serv_r = hnsw.search_serving(
         index, queries, k=10, metric="l2_sq", params=_HNSW_PARAMS,
         nprobe_shards=4, centroids=cents,
-    ).localCheckpoint()
+    )
     cog_r = hnsw.search(
         index, queries, k=10, metric="l2_sq", params=_HNSW_PARAMS,
         num_shards=_hnsw_num_shards(spark, sf_dir), nprobe_shards=4,

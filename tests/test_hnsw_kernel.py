@@ -363,3 +363,128 @@ def test_search_batch_native_matches_python(kind, n, k, ef_search, self_queries,
         assert (dist[:, 0] == 0.0).all()
     if n:
         assert (loc[:, : min(k, n)] >= 0).all()
+
+
+# ---------------------------------------------------------------------------
+# rehydration: flat core vs list adapter vs the full lexsort
+
+
+def _lexsort_reference(ids, layers, e_layers, e_dsts, e_dists):
+    """Per-layer (indptr, nbrs) CSR and (entry, entry_layer) by the plain
+    definition: lexsort every edge by (layer, src, dist, local dst)."""
+    n = len(ids)
+    local = {int(g): i for i, g in enumerate(ids)}
+    src = np.repeat(np.arange(n), [len(x) for x in e_dsts])
+    lay = np.array([v for x in e_layers for v in x], dtype=np.int64)
+    dst = np.array([local[int(v)] for x in e_dsts for v in x], dtype=np.int64)
+    dist = np.array([v for x in e_dists for v in x], dtype=np.float64)
+    perm = np.lexsort((dst, dist, src, lay))
+    csr = {}
+    for lc in np.unique(lay).tolist():
+        m = lay[perm] == lc
+        indptr = np.r_[0, np.cumsum(np.bincount(src[perm][m], minlength=n))]
+        csr[lc] = (indptr, dst[perm][m])
+    top = int(layers.max())
+    on_top = np.flatnonzero(layers == top)
+    return csr, (int(on_top[np.argmin(ids[on_top])]), top)
+
+
+def _assert_rehydration_parity(rows, params, monkeypatch) -> bool:
+    """Rehydrate one shard's Arrow rows (ordered by vec_id) through the
+    list adapter and through the flat core on the Arrow list values; both
+    must give the lexsort reference's CSR and entry, and the dict form
+    the same neighbour order. Returns whether the stored-order check
+    passed (False = the lexsort branch ran)."""
+    from hawk_pack_spark.operators.hnsw import _flat
+
+    checks = []
+    real = K._runs_ascending
+    monkeypatch.setattr(
+        K, "_runs_ascending", lambda *a: checks.append(real(*a)) or checks[-1]
+    )
+    ids = rows.column("vec_id").to_numpy()
+    layers = rows.column("layer").to_numpy()
+    data = np.zeros((len(ids), 2))  # the payload plays no part in the CSR
+    la, ds, di = (rows.column(c).to_pylist() for c in ("e_layer", "e_dst", "e_dist"))
+    csr, entry = _lexsort_reference(ids, layers, la, ds, di)
+    counts, flat_lay = _flat(rows.column("e_layer"))
+    core = K.index_from_flat(
+        ids, data, "l2_sq", params, counts, flat_lay,
+        _flat(rows.column("e_dst"))[1], _flat(rows.column("e_dist"))[1],
+        layers=layers, frozen=True,
+    )
+    adapter = K.index_from_arrays(
+        ids, data, "l2_sq", params, la, ds, di, layers=layers, frozen=True
+    )
+    for index in (core, adapter):
+        assert (index.entry, index.entry_layer) == entry
+        assert sorted(index.csr) == sorted(csr)
+        for lc, (indptr, nbrs) in csr.items():
+            np.testing.assert_array_equal(index.csr[lc][0], indptr)
+            np.testing.assert_array_equal(index.csr[lc][1], nbrs)
+    as_dict = K.index_from_arrays(ids, data, "l2_sq", params, la, ds, di, layers=layers)
+    for lc, (indptr, nbrs) in csr.items():
+        for node, run in as_dict.adj[lc].items():
+            assert [t for _, t in run] == nbrs[indptr[node]:indptr[node + 1]].tolist()
+    assert len(set(checks)) == 1
+    return checks[0]
+
+
+def test_rehydration_parity_flat_core_and_list_adapter(spark, monkeypatch):
+    """The flat rehydration core and the list adapter give the same CSR
+    and entry as a full (layer, src, dist, dst) lexsort on every stored
+    form of a shard: a `build_local` shard, a `to_links`→`from_links`
+    round trip, a `delete_from_index`-repaired shard — all stored
+    (dist, dst)-ascending, so the stored-order check passes and the
+    lexsort is skipped — and a shard whose per-node edge order was
+    shuffled on purpose, which must take the lexsort branch and still
+    match."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    from pyspark.sql import functions as F
+
+    from hawk_pack_spark.operators import hnsw
+
+    params = HawkParams.new(32, 16, 8)
+    rng = np.random.default_rng(11)
+    n = 300
+    data = rng.standard_normal((n, 6))
+    ids = np.arange(n, dtype=np.int64) * 5 + 2
+
+    built = K.build_local(ids, data, "l2_sq", params)
+    la, ds, di = K.adjacency_arrays(built, ids)
+    layers = K.assign_layer(K.uniform_from_ids(ids), params.m_L)
+    local = pa.table({
+        "vec_id": ids, "layer": layers,
+        "e_layer": pa.array(la, pa.list_(pa.int32())),
+        "e_dst": pa.array(ds, pa.list_(pa.int64())),
+        "e_dist": pa.array(di, pa.list_(pa.float64())),
+    })
+    assert _assert_rehydration_parity(local, params, monkeypatch)
+
+    perms = [rng.permutation(len(x)) for x in ds]
+    shuffled = local.set_column(2, "e_layer", pa.array(
+        [[x[i] for i in p] for x, p in zip(la, perms)], pa.list_(pa.int32())
+    )).set_column(3, "e_dst", pa.array(
+        [[x[i] for i in p] for x, p in zip(ds, perms)], pa.list_(pa.int64())
+    )).set_column(4, "e_dist", pa.array(
+        [[x[i] for i in p] for x, p in zip(di, perms)], pa.list_(pa.float64())
+    ))
+    assert not _assert_rehydration_parity(shuffled, params, monkeypatch)
+
+    vecs = spark.createDataFrame(
+        [(int(i), v.tolist()) for i, v in zip(ids, data)],
+        "vec_id long, embedding array<double>",
+    )
+    index = hnsw.build_index(vecs, params=params, num_shards=2).localCheckpoint()
+    round_trip = hnsw.from_links(hnsw.to_links(index), vecs)
+    repaired = hnsw.delete_from_index(
+        index, vecs.where(F.col("vec_id") % 7 == 0).select("vec_id"),
+        metric="l2_sq", params=params,
+    )
+    for frame in (index, round_trip, repaired):
+        table = frame.select(*hnsw._SHARD_COLS).toArrow()
+        for shard in (0, 1):
+            rows = table.filter(pc.equal(table["shard"], shard)).sort_by("vec_id")
+            assert rows.num_rows > 100
+            assert _assert_rehydration_parity(rows, params, monkeypatch)

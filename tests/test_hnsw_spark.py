@@ -7,6 +7,7 @@ build over u64 codes, search each inserted code, assert self-match.
 from __future__ import annotations
 
 import numpy as np
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -590,9 +591,12 @@ def _group_stage_tasks(sc, group: str, timeout_s: float = 30.0) -> list[int]:
 
 def test_search_serving_runs_one_python_task_per_core(spark):
     """The serving scan is coalesced to defaultParallelism partitions:
-    over a 15-shard index on local[4], the Python (mapInPandas) stage —
-    the job group's first stage, the scan leaf — runs at most 4 tasks,
-    not one per shard partition, and results are unchanged."""
+    over a 15-shard index on local[4], the search runs as ONE stage (the
+    Python mapInArrow scan; the top-k merge happens on the driver, so
+    there is no Window shuffle stage) of at most 4 tasks, not one per
+    shard partition, and results are unchanged. The search runs when
+    `search_serving` is called, so the job group wraps the call; the
+    query batch is a pandas-built local frame, whose collect runs no job."""
     params = HawkParams.new(32, 16, 8)
     codes = spark.range(600).select(
         F.col("id").alias("vec_id"), (F.col("id") * 37).alias("code")
@@ -601,26 +605,72 @@ def test_search_serving_runs_one_python_task_per_core(spark):
         codes, metric="hamming", params=params, num_shards=15, vec_col="code"
     ).localCheckpoint()
     assert index.rdd.getNumPartitions() == 15
-    queries = spark.range(0, 600, 13).select(
-        F.col("id").alias("query_id"), (F.col("id") * 37).alias("query_vec")
+    q_ids = np.arange(0, 600, 13, dtype=np.int64)
+    queries = spark.createDataFrame(
+        pd.DataFrame({"query_id": q_ids, "query_vec": q_ids * 37})
     )
     sc = spark.sparkContext
     assert sc.defaultParallelism == 4
-    res = hnsw.search_serving(
-        index, queries, k=3, metric="hamming", params=params
-    )
     group = "test-serving-task-count"
     sc.setJobGroup(group, "search_serving task count")
     try:
-        rows = res.collect()
+        rows = hnsw.search_serving(
+            index, queries, k=3, metric="hamming", params=params
+        ).collect()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     tasks = _group_stage_tasks(sc, group)
+    assert len(tasks) == 1, tasks
     assert tasks[0] <= 4, tasks
     assert all(
         r.vec_id == r.query_id and r.dist == 0.0 for r in rows if r.rank == 1
     )
-    assert len(rows) == 3 * len(range(0, 600, 13))
+    assert len(rows) == 3 * len(q_ids)
+
+
+def test_search_serving_breaks_cross_shard_ties_by_vec_id(spark):
+    """Copies of one point spread over several shards all tie at one
+    distance. With the k cut inside the tie, the per-task top-k and the
+    driver-side merge must keep the lowest vec_ids: the same rows as the
+    cogroup search's Window merge and an exact numpy reference. The
+    result types are the Window merge's for empty and non-empty batches."""
+    points = np.array(
+        [[0] * 8, [255] * 8, [10, 200, 37, 99, 128, 5, 250, 64]], dtype=np.float64
+    )
+    dups, k = 12, 5
+    ids = np.random.default_rng(3).permutation(len(points) * dups)
+    data = points[np.arange(len(ids)) // dups]  # row j copies point j // dups
+    vecs = spark.createDataFrame(
+        [(int(v), data[j].tolist()) for j, v in enumerate(ids)],
+        "vec_id long, embedding array<double>",
+    )
+    params = HawkParams.new(64, 64, 8)  # ef covers a whole shard
+    index = hnsw.build_index(
+        vecs, metric="l2_sq", params=params, num_shards=4
+    ).localCheckpoint()
+    shard_of = dict(index.select("vec_id", "shard").collect())
+    for p in range(len(points)):
+        assert len({shard_of[int(v)] for v in ids[p * dups:(p + 1) * dups]}) > 1
+    # one query on each point (distance 0) and one off it (distance 2.0)
+    q_data = np.vstack([points, points + 0.5])
+    queries = spark.createDataFrame(
+        [(i, q.tolist()) for i, q in enumerate(q_data)],
+        "query_id long, query_vec array<double>",
+    )
+    want = set()
+    for i, q in enumerate(q_data):
+        d = ((data - q) ** 2).sum(axis=1)
+        for r, j in enumerate(np.lexsort((ids, d))[:k]):
+            want.add((i, int(ids[j]), float(d[j]), r + 1))
+    served = hnsw.search_serving(index, queries, k=k, params=params)
+    cogroup = hnsw.search(index, queries, k=k, params=params)
+    assert {tuple(r) for r in served.collect()} == want
+    assert {tuple(r) for r in cogroup.collect()} == want
+    types = [("query_id", "bigint"), ("vec_id", "bigint"), ("dist", "double"),
+             ("rank", "int")]
+    assert served.dtypes == cogroup.dtypes == types
+    none = queries.where(F.col("query_id") < 0)
+    assert hnsw.search_serving(index, none, k=k, params=params).dtypes == types
 
 
 def test_search_serving_bounds_driver_collect(spark, code_index, monkeypatch):

@@ -115,7 +115,7 @@ def test_blocked_all_pairs_no_cartesian(spark, sf_dir):
 
 def test_routed_search_broadcasts_routing_table(spark, sf_dir):
     """Shard-routed search: the query→shard routing join must broadcast
-    the small side; the kernel stage stays a cogroup."""
+    the small side; the kernel stage stays a cogroup (Arrow-native)."""
     import contextlib as _ctx
     import io as _io
 
@@ -141,7 +141,7 @@ def test_routed_search_broadcasts_routing_table(spark, sf_dir):
     with _ctx.redirect_stdout(buf):
         out.explain("formatted")
     s = buf.getvalue()
-    assert "FlatMapCoGroupsInPandas" in s
+    assert "FlatMapCoGroupsInArrow" in s
     assert "BroadcastHashJoin" in s or "BroadcastExchange" in s
     assert "CartesianProduct" not in s
 
