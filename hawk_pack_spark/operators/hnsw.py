@@ -56,15 +56,20 @@ from pyspark.sql import functions as F
 from hawk_pack_spark.config import DEFAULT_PARAMS, HawkParams
 from hawk_pack_spark.operators import _hnsw_kernel as K
 from hawk_pack_spark.operators.similarity import _collect_query_batch
+from hawk_pack_spark.operators.topk import (
+    RESULT_SCHEMA,
+    SEARCH_SCHEMA,
+    fold_lr,
+    hits_table,
+    l2_fold,
+    merge_topk,
+    result_frame,
+)
 
 INDEX_SCHEMA = (
     "shard int, vec_id long, layer int, code long, vec array<double>, "
     "e_layer array<int>, e_dst array<long>, e_dist array<double>"
 )
-
-# per-shard (and per-task) hits; the merged result adds the 1-based rank
-SEARCH_SCHEMA = "query_id long, vec_id long, dist double"
-RESULT_SCHEMA = "query_id long, vec_id long, dist double, rank int"
 
 # queries a serving surface collects driver-side in one batch
 MAX_DRIVER_QUERIES = 100_000
@@ -137,52 +142,17 @@ def _search_shard(
     return np.repeat(q_ids, hit.sum(axis=1)), ids[local[hit]], dist[hit]
 
 
-def _topk(
-    qid: np.ndarray, vid: np.ndarray, dist: np.ndarray, k: int
-) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
-    """Each query's k best hits by (dist, vec_id) — the Window merge's
-    order — with their 1-based rank."""
-    order = np.lexsort((vid, dist, qid))
-    qid, vid, dist = qid[order], vid[order], dist[order]
-    starts = np.flatnonzero(np.r_[True, qid[1:] != qid[:-1]])
-    run_start = np.repeat(starts, np.diff(np.r_[starts, len(qid)]))
-    rank = np.arange(1, len(qid) + 1) - run_start
-    keep = rank <= k
-    return qid[keep], vid[keep], dist[keep], rank[keep]
-
-
-def _hits(qid: np.ndarray, vid: np.ndarray, dist: np.ndarray) -> pa.Table:
-    """SEARCH_SCHEMA rows as an Arrow table."""
-    return pa.table({
-        "query_id": pa.array(qid, pa.int64()),
-        "vec_id": pa.array(vid, pa.int64()),
-        "dist": pa.array(dist, pa.float64()),
-    })
-
-
-def _fold_lr(terms: np.ndarray) -> np.ndarray:
-    """Strict left-to-right double accumulation over the last axis — the
-    same associativity as ``F.aggregate``'s sequential fold, so driver-side
-    routing scores agree bit-for-bit with the cogroup router's
-    ``distance_expr`` scores and near-tie centroids route identically."""
-    acc = np.zeros(terms.shape[:-1], dtype=np.float64)
-    for d in range(terms.shape[-1]):
-        acc = acc + terms[..., d]
-    return acc
-
-
 def _route_dists(q_data: np.ndarray, c_mat: np.ndarray, metric: str) -> np.ndarray:
     """(nq, ncells) centroid routing distances, dispatched on metric to
     mirror ``functions/distance.py`` expression-for-expression. Supports
     exactly the metrics the search kernel supports; anything else raises
     instead of silently routing by the wrong geometry."""
     if metric == "l2_sq":
-        d = q_data[:, None, :] - c_mat[None, :, :]
-        return _fold_lr(d * d)
+        return l2_fold(q_data[:, None, :], c_mat[None, :, :])
     if metric == "cosine":
-        dots = _fold_lr(q_data[:, None, :] * c_mat[None, :, :])
-        qn = np.sqrt(_fold_lr(q_data * q_data))
-        cn = np.sqrt(_fold_lr(c_mat * c_mat))
+        dots = fold_lr(q_data[:, None, :], c_mat[None, :, :])
+        qn = np.sqrt(fold_lr(q_data, q_data))
+        cn = np.sqrt(fold_lr(c_mat, c_mat))
         return 1.0 - dots / (qn[:, None] * cn[None, :])
     raise NotImplementedError(
         f"centroid routing for metric {metric!r} is not implemented; "
@@ -578,13 +548,10 @@ def search_serving(
     other metrics) and keeps each query's top-k across its shards by
     (dist, vec_id). The search therefore runs as ONE Spark stage, when
     this function is called: the driver collects at most
-    nq · k · min(probes per query, tasks) rows — ≤ 20 000 for a
-    500-query batch at k=10, nprobe 6, and ≤ 6 M rows (≈144 MB) at
-    ``MAX_DRIVER_QUERIES`` queries, k=10, nprobe 6 — takes the final
-    (dist, vec_id) top-k and rank in numpy, and returns them as a local
-    (already computed) DataFrame: (query_id long, vec_id long,
-    dist double, rank int), the same rows and types as the Window
-    merge of `search`.
+    nq · k · min(probes per query, tasks) rows (≤ 20 000 for 500
+    queries at k=10, nprobe 6; ≤ 6 M ≈ 144 MB at ``MAX_DRIVER_QUERIES``)
+    and merges them (`topk.result_frame`) into a local DataFrame with
+    the rows and types of `search`'s Window merge.
 
     Requirements: index partitions must contain whole shards (true for
     ``build_index`` output and anything ``repartition(n, "shard")``-ed
@@ -660,15 +627,10 @@ def search_serving(
                     metric, params, k, ef_search,
                 ))
         if found:
-            qid, vid, dist, _ = _topk(*(np.concatenate(c) for c in zip(*found)), k)
-            yield from _hits(qid, vid, dist).to_batches()
+            qid, vid, dist, _ = merge_topk(*(np.concatenate(c) for c in zip(*found)), k)
+            yield from hits_table(qid, vid, dist).to_batches()
 
-    hits = scan.mapInArrow(run, SEARCH_SCHEMA).toArrow()
-    qid, vid, dist, rank = _topk(
-        *(hits.column(c).to_numpy() for c in ("query_id", "vec_id", "dist")), k
-    )
-    out = _hits(qid, vid, dist).append_column("rank", pa.array(rank, pa.int32()))
-    return spark.createDataFrame(out, RESULT_SCHEMA)
+    return result_frame(spark, scan.mapInArrow(run, SEARCH_SCHEMA).toArrow(), k)
 
 
 def search(
@@ -741,8 +703,8 @@ def search(
     def search_shard(left: pa.Table, right: pa.Table) -> pa.Table:
         K.CUSTOM_BATCH.update(_custom)
         if left.num_rows == 0 or right.num_rows == 0:
-            return _hits(np.empty(0, np.int64), np.empty(0, np.int64), np.empty(0))
-        return _hits(*_search_shard(
+            return hits_table(np.empty(0, np.int64), np.empty(0, np.int64), np.empty(0))
+        return hits_table(*_search_shard(
             left.sort_by("vec_id"), right.column("query_id").to_numpy(),
             _arrow_payload(right, metric), metric, params, k, ef_search,
         ))

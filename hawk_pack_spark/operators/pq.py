@@ -14,26 +14,26 @@ does not depend on the corpus shape. IVF variants encode RESIDUALS
   with the codebooks in a broadcast. SQ8 train/encode live in
   `similarity` (`sq8_train`, `sq8_encode`).
 - SEARCH: every search (`pq_search`, `ivfpq_search`, `ivfsq8_search`,
-  `similarity.sq8_topk` and the exact scans `similarity.l2_topk_numpy`,
-  `hamming_topk_numpy` and `cosine_topk_numpy`) is argument handling
-  around one skeleton, `_scan_topk`, parameterized by a distance
-  scorer — the hawk-pack shape of a fixed engine over a store's
-  distance:
+  `similarity.sq8_topk`, the exact `similarity.l2_topk_numpy`,
+  `hamming_topk_numpy`, `cosine_topk_numpy` and the IVF-Flat
+  `similarity.ivf_search`) is argument handling around one skeleton,
+  `_scan_topk`, parameterized by a distance scorer — the hawk-pack
+  shape of a fixed engine over a store's distance:
   1. collect the query batch (bounded, below);
   2. route each query to its ``nprobe`` nearest cells (stable sort on
-     the expanded-form distance); a flat scan skips routing: every
-     query meets every row, with no residual, so the query payload
-     keeps its dtype (uint64 Hamming codes);
-  3. filter the scan to the routed cells (`cell IN (...)`, which
-     becomes PartitionFilters on a cell-partitioned layout, so
-     per-query I/O tracks nprobe);
-  4. per (Arrow batch, cell), score the routed (residual) queries
-     against the payload with ``score(state, rq, codes[, cnorm]) ->
-     (nq_c, n)``, in query chunks whose distance matrix stays under
-     `_TILE_BYTES`, and keep each query's partial top-k by
+     ``distance_expr``'s l2_sq fold, `topk.l2_fold`); a flat scan skips
+     routing and the residual, so the query payload keeps its dtype;
+  3. filter the scan to the routed cells (`cell IN (...)`: partition
+     filters on a cell-partitioned layout) and coalesce it to at most
+     one Python task per core;
+  4. per (Arrow batch, cell), score the routed (residual) queries with
+     ``score(state, rq, codes[, cnorm]) -> (nq_c, n)`` in query chunks
+     under `_TILE_BYTES`; each task keeps a running top-k per query by
      (dist, vec_id) — ties break by vec_id at any partitioning;
-  5. merge globally with `topk_rows`, then optionally re-rank an
-     ``oversample``·k shortlist with exact float L2² distances.
+  5. the driver merges the partial rows in numpy (`topk.merge_topk`);
+     a re-rank fetches the ``oversample``·k shortlist's floats with one
+     broadcast join and scores them there in ``distance_expr``'s fold
+     order. A search is ONE Python stage, run when it is called.
 
   Scorers: `_adc_scores` (PQ ADC — per-subspace LUT in m matmuls, then
   an m-gather sum in subspace order; no float vector is read),
@@ -45,12 +45,11 @@ does not depend on the corpus shape. IVF variants encode RESIDUALS
   (−sim, negated back by `cosine_topk_numpy`).
 
 Serving-surface bound: every search collects its query batch to the
-driver, bounded by ``max_driver_queries`` (the discipline of
-`ann_search`, hnsw.py). Two overflow policies: the quantized searches
-raise a ValueError naming the bound instead of risking a driver OOM;
-the exact scans, which are the bulk fallbacks, run the distributed
-expression-join scan (`knn_exact`) instead. Bulk batches belong there
-or on the cogroup HNSW path.
+driver (``max_driver_queries``, as `ann_search`), and its merge rows
+are kept within `_DRIVER_ROWS` by running fewer scan tasks, both
+before the scan. On overflow the quantized searches and `ivf_search`
+raise a ValueError naming the bound; the exact scans, the bulk
+fallbacks, run the distributed expression-join scan (`knn_exact`).
 
 All stages are seeded and deterministic. Recall vs exact kNN is
 asserted in tests on the fixture embeddings.
@@ -59,10 +58,10 @@ asserted in tests on the fixture embeddings.
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from hawk_pack_spark.functions.distance import distance_expr
 from hawk_pack_spark.operators.materialize import materialize
 from hawk_pack_spark.operators.similarity import (
     _collect_query_batch,
@@ -71,13 +70,24 @@ from hawk_pack_spark.operators.similarity import (
     sq8_encode,
     sq8_train,
 )
-from hawk_pack_spark.operators.topk import topk_rows
+from hawk_pack_spark.operators.topk import (
+    RESULT_SCHEMA,
+    SEARCH_SCHEMA,
+    hits_table,
+    l2_fold,
+    merge_topk,
+    result_frame,
+)
 
 # Byte budget of one scored tile, the (routed queries × batch rows)
 # float64 distance matrix: each (Arrow batch, cell) is scored in query
 # chunks under it, so a task's memory does not grow with the query
 # batch (100 000 queries × a 10 000-row Arrow batch is 8 GB at once).
 _TILE_BYTES = 96 << 20
+
+# (query_id, vec_id, dist) rows of 24 B one scan may send to its
+# driver merge (≈144 MB), counted by `_scan_topk` before the scan.
+_DRIVER_ROWS = 6_000_000
 
 
 def _kmeans_np(x: np.ndarray, k: int, seed: int, iters: int = 20) -> np.ndarray:
@@ -138,8 +148,10 @@ def pq_encode(
     codebooks: np.ndarray,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
+    keep: tuple[str, ...] = (),
 ) -> DataFrame:
-    """(id, codes ARRAY<SMALLINT>[m]) — 1 byte of information per code."""
+    """(id, codes ARRAY<SMALLINT>[m]) — 1 byte of information per code.
+    ``keep`` columns of ``vectors`` pass through between the two."""
     spark = vectors.sparkSession
     bc = spark.sparkContext.broadcast(codebooks)
 
@@ -164,6 +176,7 @@ def pq_encode(
 
     return vectors.select(
         F.col(id_col).cast("long").alias("vec_id"),
+        *keep,
         encode(F.col(vec_col).cast("array<double>")).alias("codes"),
     )
 
@@ -179,12 +192,11 @@ def _residual_cells(
 ) -> tuple[DataFrame, list]:
     """The IVF builds' shared prelude: `ivf_build`'s cells, then each
     vector's residual ``_resid`` = v − its cell centre, as
-    (vec_id, cell, _resid) materialized once. The codebook/bounds
-    training, the encode and the cell re-join each read it, and each
-    would otherwise re-run the k-means assignment UDF over the corpus
-    (reuse beats recompute; an index build materializes its input
-    exactly once). The frame is CORPUS-sized, so the barrier is the
-    size-gated `materialize`."""
+    (vec_id, cell, _resid) materialized once: the training and the
+    encode (which carries ``cell`` through with this partitioning; a
+    re-join would shuffle into one AQE-coalesced partition, one Python
+    task per scan) would each re-run the k-means assignment UDF. The
+    frame is CORPUS-sized, so the barrier is the size-gated `materialize`."""
     assigned, centers = ivf_build(
         vectors, n_clusters=n_clusters, id_col=id_col, vec_col=vec_col,
         seed=seed, max_iter=kmeans_iter, fit_fraction=fit_fraction,
@@ -258,10 +270,7 @@ def ivfpq_build(
         resid, m=m, k=k, vec_col="_resid", sample_size=sample_size,
         seed=seed, iters=pq_iters,
     )
-    enc = pq_encode(resid, codebooks, id_col="vec_id", vec_col="_resid")
-    encoded = enc.join(resid.select("vec_id", "cell"), "vec_id").select(
-        "vec_id", "cell", "codes"
-    )
+    encoded = pq_encode(resid, codebooks, vec_col="_resid", keep=("cell",))
     return encoded, centers, codebooks
 
 
@@ -301,7 +310,7 @@ def _sq8_scores(bounds, rq, codes, cnorm):
 
 def _topk_cols(d: np.ndarray, ids: np.ndarray, take: int) -> np.ndarray:
     """Per row of ``d``, the column indices of the ``take`` smallest
-    (dist, vec_id) — the order `topk_rows` merges in. argpartition
+    (dist, vec_id) — the order `topk.merge_topk` merges in. argpartition
     alone keeps an arbitrary member of a tie that straddles the cut
     (duplicate vectors have equal codes), which would make the
     shortlist depend on how rows are split into partitions."""
@@ -317,8 +326,6 @@ def _arrow_matrix(col) -> np.ndarray:
     """A scanned Arrow column as numpy, decoded by its type: list and
     binary columns through `_list_col_matrix` in their stored element
     type, primitive ones (vec_id, 64-bit Hamming codes, cnorm) as is."""
-    import pyarrow as pa
-
     if pa.types.is_primitive(col.type):
         return col.to_numpy(zero_copy_only=False)
     return _list_col_matrix(col, dtype=None)
@@ -346,6 +353,7 @@ def _scan_topk(
     overflow=None,
     pre: tuple | None = None,
     refine=None,
+    residual: bool = True,
 ) -> DataFrame:
     """The search skeleton (module docstring, steps 1-5).
     ``score(state, rq, codes, *aux_columns)`` returns the (nq_c, n)
@@ -354,41 +362,49 @@ def _scan_topk(
     ``refine(state, rq, idx, codes, *aux_columns)``, when given,
     recomputes the (nq_c, take) distances of the selected columns
     ``idx``. ``centers=None`` is a flat scan: no routing, no residual,
-    so the query payload keeps its dtype. ``pre`` is an already
-    collected (ids, payload) batch. ``overflow`` answers a batch above
-    ``max_driver_queries`` (a no-argument callable returning the
-    result frame); without it the batch raises ValueError. Returns
-    (query_id, vec_id, dist, rank)."""
+    so the query payload keeps its dtype; ``residual=False`` routes by
+    ``centers`` but scores the raw queries (IVF-Flat). ``pre`` is an
+    already collected (ids, payload) batch.
+
+    Driver budget: a task sends ≤ nq · shortlist rows and a query
+    reaches ≤ min(tasks, nprobe) tasks (a flat scan: all), so the scan
+    drops to as few tasks as keep that under `_DRIVER_ROWS` (100 000
+    queries × 50 × 4 tasks would be 480 MB: one task). A batch over
+    ``max_driver_queries``, or whose nq · shortlist alone exceeds
+    `_DRIVER_ROWS`, goes to ``overflow`` (a no-argument callable) or
+    raises ValueError before the scan. A re-rank also fetches ≤ nq ·
+    shortlist float vectors (12.8 MB for 500 queries at dim 64).
+    Returns a local (query_id, vec_id, dist, rank) DataFrame."""
     spark = encoded.sparkSession
     batch = pre if pre is not None else _collect_query_batch(
         queries, query_id, query_col, max_driver_queries
     )
-    if batch is None:
+    shortlist_k = kth * oversample if rerank_with is not None else kth
+    tasks = spark.sparkContext.defaultParallelism  # driver budget: docstring
+    fits = 0 if batch is None else _DRIVER_ROWS // max(1, len(batch[0]) * shortlist_k)
+    if batch is None or centers is None or min(nprobe, len(centers)) > fits:
+        tasks = min(tasks, fits)
+    if tasks < 1:
         if overflow is not None:
             return overflow()
-        raise ValueError(
+        bound = (
             f"query batch exceeds max_driver_queries={max_driver_queries}: "
-            f"{caller} collects the query batch driver-side (a serving "
-            "surface). Split the batch, raise max_driver_queries "
-            "explicitly, or use the distributed exact path (knn_exact) "
-            "for bulk batches."
+            "raise it explicitly or split the batch" if batch is None else
+            f"{len(batch[0])} queries × {shortlist_k} shortlist rows exceed "
+            f"_DRIVER_ROWS={_DRIVER_ROWS}: split the batch or lower k/oversample"
         )
+        raise ValueError(f"{bound}. {caller} merges a query batch driver-side "
+                         "(a serving surface); bulk batches belong on knn_exact.")
     qids, qx = batch
     if not len(qids):
-        return spark.createDataFrame(
-            [], "query_id long, vec_id long, dist double, rank int"
-        )
+        return spark.createDataFrame([], RESULT_SCHEMA)
     cols = [F.col(id_col).cast("long").alias("vec_id"), code_col, *aux]
     if centers is None:  # flat: one cell holding every query
         c_mat, routed = None, {0: np.arange(len(qids))}
         scan = encoded.select(*cols)
     else:
         c_mat = np.asarray(centers, dtype=np.float64)
-        cd = (
-            (qx * qx).sum(1, keepdims=True)
-            - 2.0 * qx @ c_mat.T
-            + (c_mat * c_mat).sum(1)[None, :]
-        )
+        cd = l2_fold(qx[:, None, :], c_mat[None, :, :])
         npb = min(nprobe, len(c_mat))
         cell_of = np.argsort(cd, axis=1, kind="stable")[:, :npb].ravel()
         q_of = np.repeat(np.arange(len(qids)), npb)
@@ -396,15 +412,15 @@ def _scan_topk(
         cells, starts = np.unique(cell_of[by_cell], return_index=True)
         routed = dict(zip(cells.tolist(), np.split(q_of[by_cell], starts[1:])))
         scan = encoded.where(F.col("cell").isin(list(routed))).select(*cols, "cell")
-    shortlist_k = kth * oversample if rerank_with is not None else kth
+    scan = scan.coalesce(tasks)  # a Python task has a fixed cost: ≤ 1 per core
     bc = spark.sparkContext.broadcast((qids, qx, c_mat, routed, shortlist_k, state))
     tile_bytes = _TILE_BYTES  # read on the driver, shipped in the closure
+    shifted = residual and c_mat is not None
 
     def part(batches):
-        import pyarrow as pa
-
         qids_, qx_, c_mat_, routed_, kth_, state_ = bc.value
         flat = c_mat_ is None
+        held = []
         for batch in batches:
             if batch.num_rows == 0:
                 continue
@@ -413,7 +429,6 @@ def _scan_topk(
             cell_ids = None if flat else batch.column("cell").to_numpy(
                 zero_copy_only=False
             )
-            out = []
             for cell in [0] if flat else np.unique(cell_ids):  # all routed
                 rows = slice(None) if flat else cell_ids == cell
                 cid, tile = ids[rows], [c[rows] for c in payload]
@@ -424,49 +439,54 @@ def _scan_topk(
                 step = max(1, tile_bytes // (8 * len(cid)))
                 for s in range(0, len(q_idx), step):
                     qi = q_idx[s : s + step]
-                    rq = qx_[qi] if flat else qx_[qi] - c_mat_[cell][None, :]
+                    rq = qx_[qi] - c_mat_[cell][None, :] if shifted else qx_[qi]
                     d = score(state_, rq, *tile)
                     idx = _topk_cols(d, cid, take)
                     dist = (
                         refine(state_, rq, idx, *tile) if refine is not None
                         else np.take_along_axis(d, idx, axis=1)
                     )
-                    out.append((np.repeat(qids_[qi], take), cid[idx].ravel(), dist.ravel()))
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(np.concatenate(c)) for c in zip(*out)],
-                names=["query_id", "vec_id", "dist"],
-            )
+                    held.append((np.repeat(qids_[qi], take), cid[idx].ravel(), dist.ravel()))
+            if sum(len(h[0]) for h in held) > len(qids_) * kth_:  # running top-k
+                held = [merge_topk(*map(np.concatenate, zip(*held)), kth_)[:3]]
+        if held:  # one batch per task
+            qid, vid, dist, _ = merge_topk(*map(np.concatenate, zip(*held)), kth_)
+            yield from hits_table(qid, vid, dist).to_batches()
 
-    partial = scan.mapInArrow(part, "query_id long, vec_id long, dist double")
-    approx = topk_rows(
-        partial, ["query_id"], "dist", shortlist_k, tie_cols=["vec_id"]
-    ).select("query_id", "vec_id", "dist", "rank")
-    if rerank_with is None:
-        return approx
+    hits = scan.mapInArrow(part, SEARCH_SCHEMA).toArrow()
+    if rerank_with is None or not hits.num_rows:
+        return result_frame(spark, hits, kth)
+    return _rerank(
+        spark, qids, qx, hits, shortlist_k, kth,
+        rerank_with, rerank_id_col, rerank_vec_col,
+    )
 
-    qdf = F.broadcast(
-        queries.select(
-            F.col(query_id).cast("long").alias("query_id"),
-            F.col(query_col).cast("array<double>").alias("qv"),
-        )
-    )
-    # the shortlist is bounded (|queries|·k·oversample) — broadcast it
-    # so the corpus side never shuffles for the re-rank fetch
-    exact = (
-        F.broadcast(approx.select("query_id", "vec_id"))
-        .join(rerank_with.select(
-            F.col(rerank_id_col).cast("long").alias("vec_id"),
-            F.col(rerank_vec_col).cast("array<double>").alias("v"),
-        ), "vec_id")
-        .join(qdf, "query_id")
-        .select(
-            "query_id", "vec_id",
-            distance_expr("l2_sq", F.col("qv"), F.col("v")).alias("dist"),
-        )
-    )
-    return topk_rows(exact, ["query_id"], "dist", kth, tie_cols=["vec_id"]).select(
-        "query_id", "vec_id", "dist", "rank"
-    )
+
+def _rerank(spark, qids, qx, hits, shortlist_k, kth, rerank_with, id_col, vec_col):
+    """Exact L2² top-k of the collected hits' ``shortlist_k`` best per
+    query: one broadcast join of the unique ids fetches their floats,
+    scored against the collected queries with `l2_fold` — bit-identical
+    to ``distance_expr("l2_sq")``, 0.0 for exact duplicates. Ids missing
+    from ``rerank_with`` drop out, as in an inner join."""
+    qid, vid, _, _ = merge_topk(*(c.to_numpy() for c in hits.columns), shortlist_k)
+    want = spark.createDataFrame(pa.table({"vec_id": np.unique(vid)}))
+    fetched = F.broadcast(want).join(rerank_with.select(
+        F.col(id_col).cast("long").alias("vec_id"),
+        F.col(vec_col).cast("array<double>").alias("v"),
+    ), "vec_id").toArrow().sort_by("vec_id")
+    fid = fetched.column("vec_id").to_numpy()
+    found = np.isin(vid, fid)
+    qid, vid = qid[found], vid[found]
+    vpos = np.searchsorted(fid, vid)
+    vecs = _list_col_matrix(fetched.column("v"))
+    by_q = np.argsort(qids, kind="stable")
+    qpos = by_q[np.searchsorted(qids[by_q], qid)]
+    dist = np.empty(len(qid))
+    step = max(1, _TILE_BYTES // (8 * qx.shape[1]))
+    for s in range(0, len(qid), step):
+        t = slice(s, s + step)
+        dist[t] = l2_fold(qx[qpos[t]], vecs[vpos[t]])
+    return result_frame(spark, hits_table(qid, vid, dist), kth)
 
 
 def ivfpq_search(
@@ -520,8 +540,7 @@ def pq_search(
     ``rerank_vec_col``). When given, ADC produces an ``oversample``·k
     shortlist and the final top-k is exact-ranked on the shortlist —
     the IVFPQ+re-rank recipe: the full scan stays on 8-byte codes,
-    floats are fetched for only O(oversample·k) rows per query via an
-    equi-join."""
+    floats are fetched for only O(oversample·k) rows per query."""
     return _scan_topk(
         encoded, queries, "pq_search", _adc_scores, codebooks, (),
         None, 1, kth, query_id, query_col, rerank_with, oversample,
@@ -562,10 +581,7 @@ def ivfsq8_build(
         vectors, n_clusters, id_col, vec_col, seed, kmeans_iter, fit_fraction
     )
     lo, scale = sq8_train(resid, vec_col="_resid")
-    enc = sq8_encode(resid, lo, scale, vec_id="vec_id", vec_col="_resid")
-    encoded = enc.join(resid.select("vec_id", "cell"), "vec_id").select(
-        "vec_id", "cell", "codes", "cnorm"
-    )
+    encoded = sq8_encode(resid, lo, scale, vec_col="_resid", keep=("cell",))
     return encoded, centers, lo, scale
 
 

@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from hawk_pack_spark.functions.distance import distance_expr, hamming, simhash_code
-from hawk_pack_spark.operators.topk import topk_rows
+from hawk_pack_spark.operators.topk import l2_fold, topk_rows
 
 # knn_join's corpus-sized joins pin to sort-merge at or above this row
 # count (broadcast of a corpus-sized side is unsafe there — the r9
@@ -326,47 +326,22 @@ def ivf_search(
     queries: DataFrame,
     k: int = 10,
     nprobe: int = 4,
-    metric: str = "l2_sq",
     query_id: str = "query_id",
     query_col: str = "query_vec",
 ) -> DataFrame:
-    """Probe the nprobe nearest centroids per query, exact-rank inside
-    the probed buckets. Returns (query_id, vec_id, dist, rank)."""
-    spark = assigned.sparkSession
-    centers_df = spark.createDataFrame(
-        [(i, [float(x) for x in c]) for i, c in enumerate(centers)],
-        "cluster int, center array<double>",
-    )
-    # dim is known from the centroids: the unrolled codegen fold is
-    # bit-identical to the HOF fold and ~12x faster on bulk candidate
-    # scoring (NOTES r8); non-L2 metrics keep the generic expression
-    dim = len(centers[0]) if centers else 0
+    """IVF-Flat l2_sq top-k over `ivf_build`'s (vec_id, embedding,
+    cluster): the routed `pq._scan_topk` over the raw vectors of each
+    query's ``nprobe`` nearest cells, scored in ``distance_expr``'s
+    left-to-right fold (`topk.l2_fold`). A batch over 100 000 queries
+    raises ValueError. Returns (query_id, vec_id, dist, rank)."""
+    from hawk_pack_spark.operators.pq import _scan_topk
 
-    def _l2(a, b):
-        from hawk_pack_spark.functions.distance import l2_sq_unrolled
-
-        return l2_sq_unrolled(a, b, dim) if dim else distance_expr("l2_sq", a, b)
-
-    qc = queries.crossJoin(F.broadcast(centers_df)).select(
-        F.col(query_id),
-        F.col(query_col),
-        F.col("cluster"),
-        _l2(F.col(query_col), F.col("center")).alias("cdist"),
+    return _scan_topk(
+        assigned.withColumnRenamed("cluster", "cell"), queries, "ivf_search",
+        lambda _, q, v: l2_fold(q[:, None, :], v[None, :, :]), None, (),
+        centers, nprobe, k, query_id, query_col, None, 1, "vec_id",
+        "embedding", 100_000, code_col="embedding", residual=False,
     )
-    probes = topk_rows(qc, [query_id], "cdist", nprobe, tie_cols=["cluster"]).select(
-        query_id, query_col, "cluster"
-    )
-    cand = assigned.join(F.broadcast(probes), "cluster")
-    scored = cand.select(
-        F.col(query_id),
-        F.col("vec_id"),
-        (
-            _l2(F.col(query_col), F.col("embedding"))
-            if metric == "l2_sq"
-            else distance_expr(metric, F.col(query_col), F.col("embedding"))
-        ).alias("dist"),
-    )
-    return topk_rows(scored, [query_id], "dist", k, tie_cols=["vec_id"])
 
 
 def knn_join(
@@ -1276,7 +1251,7 @@ def l2_topk_numpy(
     `_l2_scores` scorer: queries broadcast (the small side); per Arrow
     batch one BLAS product selects each query's (dist, vec_id) partial
     top-k, whose distances `_l2_refine` recomputes in the difference
-    form (exact duplicates score 0.0); `topk_rows` merges — the
+    form (exact duplicates score 0.0); the driver merges — the
     strongest exact baseline for the ANN crossover bench. Ties break by
     vec_id at any partitioning.
     ``_pre``: (q_ids, q_mat) already collected by `ann_search` — skips
@@ -1357,7 +1332,7 @@ def hamming_topk_numpy(
     broadcast; every Arrow batch of codes is XORed against all queries
     at once (in query chunks under the skeleton's tile budget) and
     popcounted; the partial top-k breaks the constant integer ties by
-    vec_id, and `topk_rows` merges. Same plan shape as `l2_topk_numpy`,
+    vec_id, and the driver merges. Same plan shape as `l2_topk_numpy`,
     so `ann_search` can dispatch hamming batches to an exact scan below
     the serving crossover (``_pre`` as there); oversized batches fall
     back to `knn_exact`."""
@@ -1399,7 +1374,7 @@ def cosine_topk_numpy(
     `_cosine_scores` scorer: queries are collected (small side,
     BOUNDED) and broadcast; each Arrow batch of vectors is scored for
     all queries in one matmul and keeps its (−sim, vec_id) partial
-    top-k; `topk_rows` merges. ~10-100× faster than the fold-expression
+    top-k; the driver merges. ~10-100× faster than the fold-expression
     path at large n. Returns (query_id, vec_id, sim, rank), sim
     descending, ties by vec_id. Oversized query batches fall back to the
     distributed expression-join scan (sim recovered as 1 − cosine_dist;
@@ -1463,11 +1438,15 @@ def sq8_encode(
     scale: np.ndarray,
     vec_id: str = "vec_id",
     vec_col: str = "embedding",
+    keep: tuple[str, ...] = (),
 ) -> DataFrame:
-    """(vec_id, codes binary): codes = round((v - lo)/scale) clipped to
-    [0, 255], one byte per dimension."""
+    """(vec_id, codes binary, cnorm): codes = round((v - lo)/scale)
+    clipped to [0, 255], one byte per dimension. ``keep`` columns of
+    ``vectors`` pass through after vec_id."""
     import pandas as pd
 
+    sel = vectors.select(vec_id, vec_col, *keep)
+    kept = "".join(f"{c} {sel.schema[c].dataType.simpleString()}, " for c in keep)
     sc = vectors.sparkSession.sparkContext
     bc = sc.broadcast((lo, scale))
 
@@ -1486,14 +1465,13 @@ def sq8_encode(
             yield pd.DataFrame(
                 {
                     "vec_id": pdf[vec_id].to_numpy(dtype=np.int64),
+                    **{c: pdf[c] for c in keep},
                     "codes": [c.tobytes() for c in codes],
                     "cnorm": cnorm,
                 }
             )
 
-    return vectors.select(vec_id, vec_col).mapInPandas(
-        enc, "vec_id long, codes binary, cnorm double"
-    )
+    return sel.mapInPandas(enc, f"vec_id long, {kept}codes binary, cnorm double")
 
 
 def sq8_topk(

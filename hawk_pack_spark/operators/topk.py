@@ -8,16 +8,20 @@ lists with trim-to-k (queue.rs:59-65). Declaratively that is exactly
 canonical distributed top-k: map-side partial top-k via the sort-based
 window, no driver involvement, no full sort of the child.
 
-Two physical forms, matching SURVEY.md §1.5:
+Forms, matching SURVEY.md §1.5:
 - exploded rows (join-friendly) → ``topk_rows``
 - nested ARRAY<STRUCT> per group (storage-friendly, the links-table
-  layout) → ``topk_array`` / ``trim_sorted_array``
+  layout) → ``collect_sorted_neighbors``
+- a serving batch's per-task partial top-k rows, merged on the driver
+  (`hnsw.search_serving`, `pq._scan_topk`) → ``merge_topk``.
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -60,9 +64,49 @@ def collect_sorted_neighbors(
     return agg
 
 
-def trim_sorted_array(nbrs: Column | str, k: int) -> Column:
-    """``trim_to_k_nearest`` on an already-sorted neighbor array
-    (reference: src/data_structures/queue.rs:59-65)."""
-    c = F.col(nbrs) if isinstance(nbrs, str) else nbrs
-    return F.slice(c, 1, k)
+SEARCH_SCHEMA = "query_id long, vec_id long, dist double"  # partial hits
+RESULT_SCHEMA = "query_id long, vec_id long, dist double, rank int"
 
+
+def merge_topk(qid, vid, dist, k):
+    """Each query's k best hits by (dist, vec_id) — `topk_rows`' order
+    with ``tie_cols=["vec_id"]`` — and their 1-based rank."""
+    order = np.lexsort((vid, dist, qid))
+    qid, vid, dist = qid[order], vid[order], dist[order]
+    starts = np.flatnonzero(np.r_[True, qid[1:] != qid[:-1]])
+    rank = np.arange(1, len(qid) + 1) - np.repeat(starts, np.diff(np.r_[starts, len(qid)]))
+    keep = rank <= k
+    return qid[keep], vid[keep], dist[keep], rank[keep]
+
+
+def hits_table(qid, vid, dist) -> pa.Table:
+    """SEARCH_SCHEMA rows as an Arrow table."""
+    return pa.table({
+        "query_id": pa.array(qid, pa.int64()),
+        "vec_id": pa.array(vid, pa.int64()),
+        "dist": pa.array(dist, pa.float64()),
+    })
+
+
+def result_frame(spark, hits: pa.Table, k: int) -> DataFrame:
+    """The merged top-k of collected partial hits as a local, already
+    computed RESULT_SCHEMA frame: the rows and types of `topk_rows`."""
+    qid, vid, dist, rank = merge_topk(*(c.to_numpy() for c in hits.columns), k)
+    out = hits_table(qid, vid, dist).append_column("rank", pa.array(rank, pa.int32()))
+    return spark.createDataFrame(out, RESULT_SCHEMA)
+
+
+def fold_lr(a: np.ndarray, b: np.ndarray, term=np.multiply) -> np.ndarray:
+    """Σ_d term(a_d, b_d), accumulated strictly left to right one
+    dimension at a time (broadcasting the leading axes, no (…, dim)
+    tensor): the associativity of ``F.aggregate``'s fold, so driver-side
+    scores are bit-identical to ``distance_expr``'s."""
+    acc = np.float64(0.0)
+    for d in range(a.shape[-1]):
+        acc = acc + term(a[..., d], b[..., d])
+    return acc
+
+
+def l2_fold(a: np.ndarray, b: np.ndarray) -> np.ndarray:
+    """``distance_expr("l2_sq")``: Σ_d (a_d − b_d)² by `fold_lr`."""
+    return fold_lr(a, b, lambda x, y: (x - y) * (x - y))

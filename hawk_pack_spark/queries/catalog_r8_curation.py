@@ -198,14 +198,19 @@ def q_ivf_manifest_restart(spark: SparkSession, sf_dir: str) -> DataFrame:
     live; any violation flips one and fails the hash:
     - rows_equal_ok: loaded-bundle search returns EXACTLY the in-memory
       search's (query, vec, rank) rows (re-ranked, so dist ties too);
-    - pruned_ok: the loaded scan is partition-pruned to the probed
-      cells (PartitionFilters — the mechanism cluster scan pruning
-      consumes, asserted on the EXECUTED plan);
+    - pruned_ok: the one Python scan the loaded search submits is
+      partition-pruned to the probed cells (PartitionFilters on
+      ``cell`` — the mechanism cluster scan pruning consumes, asserted
+      on the EXECUTED plan the search collects with ``toArrow()``; the
+      search returns a local frame, so its own plan holds no scan);
     - kind_ok: the quantizer model survives the round-trip.
     Reference analog: GraphPg's restartable-store premise
     (graph_pg.rs:24-50) applied to the cell-pruned index family."""
+    import re
     import shutil
     import tempfile
+
+    from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
 
     from hawk_pack_spark.operators.pq import ivfsq8_build, ivfsq8_search
     from hawk_pack_spark.sources.graph_io import (
@@ -226,14 +231,27 @@ def q_ivf_manifest_restart(spark: SparkSession, sf_dir: str) -> DataFrame:
     try:
         save_ivf_index(mdir, encoded, centers, "ivfsq8", lo=lo, scale=scale)
         idx = load_ivf_index(spark, mdir)
-        reloaded = idx.search(queries, k=5, nprobe=4, rerank_with=vecs)
+        plans, to_arrow = [], ClassicDataFrame.toArrow
+
+        def spy(df):  # records each plan the search collects
+            out = to_arrow(df)
+            plans.append(df._jdf.queryExecution().executedPlan().toString())
+            return out
+
+        ClassicDataFrame.toArrow = spy
+        try:
+            reloaded = idx.search(queries, k=5, nprobe=4, rerank_with=vecs)
+        finally:
+            ClassicDataFrame.toArrow = to_arrow
         rows = lambda df: {  # noqa: E731
             (r.query_id, r.vec_id, r.rank) for r in df.collect()
         }
         a, b = rows(direct), rows(reloaded)
         rows_equal_ok = bool(a) and a == b
-        plan = reloaded._jdf.queryExecution().executedPlan().toString()
-        pruned_ok = "PartitionFilters: [" in plan and "cell" in plan
+        scans = [p for p in plans if "MapInArrow" in p]
+        pruned_ok = len(scans) == 1 and bool(
+            re.search(r"PartitionFilters: \[[^\]]*cell", scans[0])
+        )
         kind_ok = idx.kind == "ivfsq8" and idx.lo is not None
     finally:
         shutil.rmtree(mdir, ignore_errors=True)

@@ -15,6 +15,7 @@ from hawk_pack_spark.config import HawkParams
 from hawk_pack_spark.operators import hnsw
 from hawk_pack_spark.operators.knn_exact import knn_exact
 from hawk_pack_spark.sources import load_table
+from spark_jobs import group_jobs_and_stage_tasks
 
 PARAMS = HawkParams.new(64, 32, 16)
 
@@ -568,27 +569,6 @@ def test_serving_search_split_shard_raises_clear_error(spark):
         ).collect()
 
 
-def _group_stage_tasks(sc, group: str, timeout_s: float = 30.0) -> list[int]:
-    """numTasks of every stage the job group ran, in stage-id order, read
-    from the status tracker once every job of the group has finished
-    (listener events arrive asynchronously after the action returns)."""
-    import time
-
-    st = sc.statusTracker()
-    deadline = time.monotonic() + timeout_s
-    while True:
-        jobs = [st.getJobInfo(j) for j in st.getJobIdsForGroup(group)]
-        done = jobs and all(
-            j is not None and j.status in ("SUCCEEDED", "FAILED") for j in jobs
-        )
-        stages = sorted({s for j in jobs if j is not None for s in j.stageIds})
-        infos = [st.getStageInfo(s) for s in stages]
-        if done and all(i is not None for i in infos):
-            return [i.numTasks for i in infos]
-        assert time.monotonic() < deadline, "job group did not finish in time"
-        time.sleep(0.2)
-
-
 def test_search_serving_runs_one_python_task_per_core(spark):
     """The serving scan is coalesced to defaultParallelism partitions:
     over a 15-shard index on local[4], the search runs as ONE stage (the
@@ -619,7 +599,7 @@ def test_search_serving_runs_one_python_task_per_core(spark):
         ).collect()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    tasks = _group_stage_tasks(sc, group)
+    _, tasks = group_jobs_and_stage_tasks(sc, group)
     assert len(tasks) == 1, tasks
     assert tasks[0] <= 4, tasks
     assert all(

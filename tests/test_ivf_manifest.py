@@ -13,6 +13,7 @@ from hawk_pack_spark.operators.pq import (
 )
 from hawk_pack_spark.sources import load_table
 from hawk_pack_spark.sources.graph_io import load_ivf_index, save_ivf_index
+from spark_jobs import assert_cell_pruned_scan, spy_collected_plans
 
 
 def _vectors(spark, sf_dir):
@@ -33,7 +34,7 @@ def _rows(df):
     )
 
 
-def test_ivfsq8_manifest_roundtrip(spark, sf_dir, tmp_path):
+def test_ivfsq8_manifest_roundtrip(spark, sf_dir, tmp_path, monkeypatch):
     vecs = _vectors(spark, sf_dir)
     queries = _queries(vecs)
     encoded, centers, lo, scale = ivfsq8_build(vecs, n_clusters=8)
@@ -44,11 +45,11 @@ def test_ivfsq8_manifest_roundtrip(spark, sf_dir, tmp_path):
     save_ivf_index(path, encoded, centers, "ivfsq8", lo=lo, scale=scale)
     idx = load_ivf_index(spark, path)
     assert idx.kind == "ivfsq8"
+    plans = spy_collected_plans(monkeypatch)
     reloaded = idx.search(queries, k=5, nprobe=4, rerank_with=vecs)
     assert _rows(direct) == _rows(reloaded) and len(_rows(direct)) > 0
     # the loaded scan is partition-pruned on the probed cells
-    plan = reloaded._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan and "cell" in plan
+    assert_cell_pruned_scan(plans)
 
 
 def test_ivfpq_manifest_roundtrip(spark, sf_dir, tmp_path):

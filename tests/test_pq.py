@@ -11,6 +11,12 @@ from hawk_pack_spark.operators import pq
 from hawk_pack_spark.operators import similarity as S
 from hawk_pack_spark.operators.knn_exact import knn_exact
 from hawk_pack_spark.sources import load_table
+from spark_jobs import (
+    assert_cell_pruned_scan,
+    group_jobs_and_stage_tasks,
+    run_in_group,
+    spy_collected_plans,
+)
 
 M, K = 8, 64  # 64 centroids is plenty at 500-row training scale
 
@@ -78,7 +84,7 @@ def test_adc_rerank_recovers_recall(spark, sf_dir):
     assert self_rows and all(abs(r.dist) < 1e-9 for r in self_rows)
 
 
-def test_ivfpq_clustered_domain_and_pruning(spark, tmp_path):
+def test_ivfpq_clustered_domain_and_pruning(spark, tmp_path, monkeypatch):
     """IVF-PQ's measured domain (NOTES r6): on a CLUSTERED corpus the
     residual codebooks spend their byte budget on local structure —
     ADC recall 0.358 vs flat PQ's 0.235 at the same bytes, and exact
@@ -140,9 +146,9 @@ def test_ivfpq_clustered_domain_and_pruning(spark, tmp_path):
     path = str(tmp_path / "ivfpq_codes")
     encoded.write.mode("overwrite").partitionBy("cell").parquet(path)
     disk = spark.read.parquet(path)
+    plans = spy_collected_plans(monkeypatch)
     probe = pq.ivfpq_search(disk, cents, cb, queries.limit(3), kth=5, nprobe=2)
-    plan = probe._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan and "cell" in plan
+    assert_cell_pruned_scan(plans)
     assert probe.groupBy("query_id").count().where("count = 5").count() == 3
 
 
@@ -197,7 +203,7 @@ def test_ivfpq_rerank_custom_columns(spark, sf_dir):
     assert a == {(r.query_id, r.vec_id, r.rank) for r in custom.collect()}
 
 
-def test_ivfsq8_recall_shape_independent(spark, tmp_path):
+def test_ivfsq8_recall_shape_independent(spark, tmp_path, monkeypatch):
     """IVF-SQ8 (VERDICT r6 #7): cell-pruned scan structure with SQ8's
     shape-independent recall. UN-re-ranked recall >= 0.95 on BOTH a
     clustered corpus (probing 4/32 cells — routing captures clusters)
@@ -252,11 +258,11 @@ def test_ivfsq8_recall_shape_independent(spark, tmp_path):
     path = str(tmp_path / "ivfsq8_codes")
     enc.write.mode("overwrite").partitionBy("cell").parquet(path)
     disk = spark.read.parquet(path)
+    plans = spy_collected_plans(monkeypatch)
     probe = pq.ivfsq8_search(
         disk, cents, lo, scale, queries.limit(3), kth=5, nprobe=2
     )
-    plan = probe._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan and "cell" in plan
+    assert_cell_pruned_scan(plans)
     assert probe.groupBy("query_id").count().where("count = 5").count() == 3
 
 
@@ -438,3 +444,181 @@ def test_tile_budget_keeps_rows(spark, quantized, monkeypatch):
     want = _rows(search, enc, queries)
     monkeypatch.setattr(pq, "_TILE_BYTES", 1)
     assert _rows(search, enc, queries) == want
+
+
+def _job_structure(spark, fn, group):
+    """(collected rows, jobs, stage task counts) of ``fn()``."""
+    sc = spark.sparkContext
+    rows = run_in_group(sc, group, lambda: fn().collect())
+    jobs, tasks = group_jobs_and_stage_tasks(sc, group)
+    return rows, jobs, tasks
+
+
+def _eight_partition_corpus(spark):
+    """(vectors, 40 self-queries as a pandas-built local frame — whose
+    collect runs no job —, IVF-SQ8 index), each in 8 partitions."""
+    import pandas as pd
+
+    rng = np.random.default_rng(5)
+    pts = rng.normal(size=(2000, 16))
+    vecs = spark.createDataFrame(
+        [(i, pts[i].tolist()) for i in range(len(pts))],
+        "vec_id long, embedding array<double>",
+    ).repartition(8).localCheckpoint()
+    q_ids = np.arange(0, 2000, 50)
+    queries = spark.createDataFrame(pd.DataFrame({
+        "query_id": q_ids, "query_vec": [pts[i].tolist() for i in q_ids],
+    }))
+    enc, cents, lo, scale = pq.ivfsq8_build(vecs, n_clusters=8, seed=7)
+    return vecs, queries, (enc.repartition(8).localCheckpoint(), cents, lo, scale)
+
+
+def test_scan_runs_one_python_stage_per_call(spark, monkeypatch):
+    """A scan is ONE Python stage of at most defaultParallelism tasks
+    (the 8-partition corpus is coalesced), merged on the driver: no
+    Window shuffle stage. `l2_topk_numpy` runs exactly that one job; a
+    re-ranked `ivfsq8_search` adds the JVM-only shortlist fetch (the
+    broadcast of the unique ids and the join's scan: 3 jobs)."""
+    vecs, queries, (enc, cents, lo, scale) = _eight_partition_corpus(spark)
+    nq = queries.count()
+    par = spark.sparkContext.defaultParallelism
+    plans = spy_collected_plans(monkeypatch)
+
+    rows, jobs, tasks = _job_structure(
+        spark, lambda: S.l2_topk_numpy(vecs, queries, k=5), "scan-jobs-l2"
+    )
+    assert (jobs, len(tasks)) == (1, 1) and tasks[0] <= par, (jobs, tasks)
+    assert len(rows) == 5 * nq
+    assert sum("MapInArrow" in p for p in plans) == 1
+
+    plans.clear()
+    rows, jobs, tasks = _job_structure(spark, lambda: pq.ivfsq8_search(
+        enc, cents, lo, scale, queries, kth=5, nprobe=3, rerank_with=vecs,
+    ), "scan-jobs-ivfsq8")
+    # the Python scan first, then the fetch over the corpus' 8 partitions
+    assert jobs == 3 and len(tasks) == 3 and tasks[0] <= par, (jobs, tasks)
+    assert sum("MapInArrow" in p for p in plans) == 1, plans
+    assert len(rows) == 5 * nq
+    assert all(r.vec_id == r.query_id and r.dist == 0.0 for r in rows if r.rank == 1)
+
+
+@pytest.mark.parametrize("search", ["pq_search", "ivfsq8_search", "ivf_search"])
+def test_driver_rerank_matches_distance_expr_bitwise(spark, search):
+    """The driver-side re-rank (and IVF-Flat's scorer) scores with the
+    left-to-right fold of ``distance_expr("l2_sq")``: every returned
+    distance equals the SQL expression's double bit for bit, and a
+    stored exact duplicate of a query scores exactly 0.0."""
+    from hawk_pack_spark.functions.distance import distance_expr
+
+    rng = np.random.default_rng(11)
+    pts = rng.normal(size=(600, 16)) * np.array([1e-3, 1.0, 1e3, 7.0] * 4)
+    vecs = spark.createDataFrame(
+        [(i, pts[i].tolist()) for i in range(len(pts))],
+        "vec_id long, embedding array<double>",
+    ).localCheckpoint()
+    q_ids = list(range(0, 600, 40))
+    queries = vecs.where(F.col("vec_id").isin(q_ids)).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
+    )
+    if search == "pq_search":
+        cb = pq.pq_train(vecs, m=4, k=16, seed=7)
+        got = pq.pq_search(
+            pq.pq_encode(vecs, cb), cb, queries, kth=8, rerank_with=vecs
+        )
+    elif search == "ivfsq8_search":
+        enc, cents, lo, scale = pq.ivfsq8_build(vecs, n_clusters=4, seed=7)
+        got = pq.ivfsq8_search(
+            enc, cents, lo, scale, queries, kth=8, nprobe=4, rerank_with=vecs
+        )
+    else:
+        assigned, cents = S.ivf_build(vecs, n_clusters=4, seed=7)
+        got = S.ivf_search(assigned, cents, queries, k=8, nprobe=4)
+    rows = got.collect()
+    assert len(rows) == 8 * len(q_ids)
+    pairs = spark.createDataFrame(
+        [(r.query_id, r.vec_id) for r in rows], "query_id long, vec_id long"
+    )
+    sql = dict(
+        ((r.query_id, r.vec_id), r.d)
+        for r in pairs.join(queries, "query_id").join(vecs, "vec_id").select(
+            "query_id", "vec_id",
+            distance_expr("l2_sq", "query_vec", "embedding").alias("d"),
+        ).collect()
+    )
+    assert all(r.dist == sql[(r.query_id, r.vec_id)] for r in rows)
+    assert {(r.query_id, r.dist) for r in rows if r.rank == 1} == {
+        (q, 0.0) for q in q_ids
+    }
+
+
+@pytest.mark.parametrize("build", ["ivfpq_build", "ivfsq8_build"])
+def test_ivf_build_encodes_residuals_in_place(spark, sf_dir, monkeypatch, build):
+    """Both IVF builds carry ``cell`` through the encode instead of
+    re-joining it by vec_id: the codes keep the materialized residual
+    frame's partitioning (a join shuffles, and AQE coalesces it to one
+    partition) and equal `pq_encode`/`sq8_encode` over those residuals."""
+    seen = []
+    residual_cells = pq._residual_cells
+
+    def spy(*args):
+        out = residual_cells(*args)
+        seen.append(out[0])
+        return out
+
+    monkeypatch.setattr(pq, "_residual_cells", spy)
+    vecs = _vectors(spark, sf_dir).repartition(6)
+    if build == "ivfpq_build":
+        enc, _, cb = pq.ivfpq_build(vecs, n_clusters=8, m=M, k=32, seed=7)
+        ref = pq.pq_encode(seen[0], cb, vec_col="_resid")
+    else:
+        enc, _, lo, scale = pq.ivfsq8_build(vecs, n_clusters=8, seed=7)
+        ref = S.sq8_encode(seen[0], lo, scale, vec_col="_resid")
+    resid = seen[0]
+    assert enc.rdd.getNumPartitions() == resid.rdd.getNumPartitions() > 1
+    want = {r.vec_id: tuple(r)[1:] for r in ref.collect()}
+    cells = dict(resid.select("vec_id", "cell").collect())
+    got = enc.collect()
+    assert len(got) == len(want) == len(cells)
+    for r in got:
+        assert r.cell == cells[r.vec_id]
+        assert tuple(r)[2:] == want[r.vec_id]
+
+
+def test_driver_merge_budget_checked_before_scan(spark, quantized, monkeypatch):
+    """A batch whose nq · shortlist rows (one task's) exceed
+    `pq._DRIVER_ROWS` never starts the scan: a quantized search raises
+    a ValueError naming the budget, an exact scan plans its distributed
+    `knn_exact` fallback."""
+    enc, search, _, name = quantized
+    plans = spy_collected_plans(monkeypatch)
+    monkeypatch.setattr(pq, "_DRIVER_ROWS", 4)
+    queries = _dup_queries(spark, 1)
+    if name.endswith("_topk_numpy"):
+        got = search(enc, queries, 5)
+        assert "MapInArrow" not in got._jdf.queryExecution().optimizedPlan().toString()
+    else:
+        with pytest.raises(ValueError, match="_DRIVER_ROWS=4"):
+            search(enc, queries, 5)
+    assert not plans
+
+
+def test_driver_budget_picks_scan_parallelism(spark, monkeypatch):
+    """When nq · shortlist rows from every task would overrun
+    `pq._DRIVER_ROWS`, the scan runs on as few tasks as fit the budget
+    instead of raising, and returns the same rows. An IVF query reaches
+    at most nprobe tasks, so a small enough nprobe keeps every task."""
+    vecs, queries, (enc, cents, lo, scale) = _eight_partition_corpus(spark)
+    par = spark.sparkContext.defaultParallelism
+    assert par > 2
+    calls = {
+        "l2": lambda: S.l2_topk_numpy(vecs, queries, k=5),
+        "ivf3": lambda: pq.ivfsq8_search(enc, cents, lo, scale, queries, kth=5, nprobe=3),
+        "ivf2": lambda: pq.ivfsq8_search(enc, cents, lo, scale, queries, kth=5, nprobe=2),
+    }
+    want = {name: sorted(fn().collect()) for name, fn in calls.items()}
+    monkeypatch.setattr(pq, "_DRIVER_ROWS", 2 * 40 * 5 + 1)  # two tasks' rows
+    for name, fn in calls.items():
+        rows, jobs, tasks = _job_structure(spark, fn, f"budget-{name}")
+        assert sorted(rows) == want[name]
+        assert (jobs, len(tasks)) == (1, 1), (name, jobs, tasks)
+        assert tasks[0] == (par if name == "ivf2" else 2), (name, tasks)
