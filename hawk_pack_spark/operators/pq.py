@@ -38,11 +38,12 @@ does not depend on the corpus shape. IVF variants encode RESIDUALS
   Scorers: `_adc_scores` (PQ ADC — per-subspace LUT in m matmuls, then
   an m-gather sum in subspace order; no float vector is read),
   `_sq8_scores` (asymmetric SQ8 — the expanded form over the encode-
-  time ``cnorm``, one float32 matmul on the code tile), and in
-  `similarity` the exact `_l2_scores` (expanded-form selection, whose
-  picks `_l2_refine` recomputes in the difference form),
-  `_hamming_scores` (XOR + 16-bit popcount LUT) and `_cosine_scores`
-  (−sim, negated back by `cosine_topk_numpy`).
+  time ``cnorm``, one fixed-grid float64 dot on the code tile, exact
+  in any BLAS blocking, so an SQ8 distance does not depend on tiling
+  or partitioning), and in `similarity` the exact `_l2_scores`
+  (expanded-form selection, whose picks `_l2_refine` recomputes in the
+  difference form), `_hamming_scores` (XOR + 16-bit popcount LUT) and
+  `_cosine_scores` (−sim, negated back by `cosine_topk_numpy`).
 
 Serving-surface bound: every search collects its query batch to the
 driver (``max_driver_queries``, as `ann_search`), and its merge rows
@@ -294,16 +295,29 @@ def _adc_scores(codebooks, rq, codes):
 
 def _sq8_scores(bounds, rq, codes, cnorm):
     """SQ8 asymmetric distances (nq, n) in the expanded form
-    ``||r||² − 2 (r·scale)·c + Σ scale²c²`` with r = rq − lo: the code
-    norm is the encode-time ``cnorm``, so the scan is ONE float32
-    matmul on the uint8 code tile (the scan is approximate; the
-    re-rank is exact float64)."""
+    ``||r||² − 2 w·c + Σ scale²c²`` with r = rq − lo, w = r·scale: the
+    code norm is the encode-time ``cnorm``, so the scan is ONE matmul
+    on the uint8 code tile (the scan is approximate; the re-rank is
+    exact float64).
+
+    The matmul is a fixed-grid float64 dot: each query's w is rounded
+    to multiples of 2^(e−24), where 2^e bounds its largest |w| (float32
+    precision), so every product with a code (< 2^8) and every partial
+    sum is an integer multiple of that grid below 2^53 while the
+    dimension is below 2^21. BLAS then returns the exact dot in any
+    blocking or summation order: a (query, row) distance is a function
+    of that pair alone, not of the tile's shape, the query chunking or
+    how rows are split into partitions (a float32 sgemm rounds an entry
+    differently by matrix shape)."""
     lo, scale = bounds
     r = rq - lo[None, :]
-    ws32 = (r * scale[None, :]).astype(np.float32)
+    w = r * scale[None, :]
+    _, e = np.frexp(np.abs(w).max(1, initial=0.0))
+    shift = (24 - e)[:, None]
+    w = np.ldexp(np.rint(np.ldexp(w, shift)), -shift)
     return (
         (r * r).sum(1)[:, None]
-        - 2.0 * (ws32 @ codes.astype(np.float32).T).astype(np.float64)
+        - 2.0 * (w @ codes.astype(np.float64).T)
         + cnorm[None, :]
     )
 
@@ -603,8 +617,9 @@ def ivfsq8_search(
 ) -> DataFrame:
     """Asymmetric SQ8 top-k over an IVF-SQ8 index (`ivfsq8_build`):
     each query probes its ``nprobe`` nearest cells and is scored as the
-    residual q − centroid, one float32 matmul per cell over the
-    8×-smaller code tile. Optional exact re-rank on an ``oversample``·k
+    residual q − centroid, one fixed-grid float64 dot per cell over the
+    8×-smaller code tile (`_sq8_scores`: a distance does not depend on
+    tiling or partitioning). Optional exact re-rank on an ``oversample``·k
     shortlist. Returns (query_id, vec_id, dist, rank) with squared-L2
     distances."""
     return _scan_topk(

@@ -1489,8 +1489,10 @@ def sq8_topk(
     max_driver_queries: int = 100_000,
 ) -> DataFrame:
     """Asymmetric SQ8 top-k over `sq8_encode`'s (vec_id, codes, cnorm):
-    the scan decodes uint8 tiles to v̂ = lo + c·scale and runs the same
-    expanded-form matmul as the exact BLAS path; floats never leave the
+    the scan scores v̂ = lo + c·scale in the expanded form over the
+    encode-time ``cnorm``, one fixed-grid float64 dot on the uint8 code
+    tile (`pq._sq8_scores`), exact in any BLAS blocking, so a distance
+    does not depend on tiling or partitioning; floats never leave the
     partition. With ``rerank_with`` (the float table, columns
     ``vec_id``/``vec_col``) the scan produces an oversample·k shortlist
     and the final top-k is exact — the PQ re-rank recipe

@@ -622,3 +622,31 @@ def test_driver_budget_picks_scan_parallelism(spark, monkeypatch):
         assert sorted(rows) == want[name]
         assert (jobs, len(tasks)) == (1, 1), (name, jobs, tasks)
         assert tasks[0] == (par if name == "ivf2" else 2), (name, tasks)
+
+
+@pytest.mark.parametrize("dim", [16, 64])
+def test_sq8_scores_independent_of_tiling(dim):
+    """An SQ8 scan distance is a function of the (query, row) pair
+    alone: scoring a tile whole equals, bit for bit, scoring uneven row
+    sub-tiles side by side and scoring one query at a time — the shapes
+    that partitioning and `_TILE_BYTES` query chunking hand the scorer."""
+    rng = np.random.default_rng(dim)
+    nq, n = 40, 500
+    rq = rng.normal(size=(nq, dim))
+    lo = rng.normal(size=dim) - 3.0
+    scale = rng.uniform(0.001, 0.05, size=dim)
+    codes = rng.integers(0, 256, size=(n, dim), dtype=np.uint8)
+    cnorm = rng.uniform(size=n)
+    bounds = (lo, scale)
+    whole = pq._sq8_scores(bounds, rq, codes, cnorm)
+    cuts = [0, 7, 130, 131, 400, n]
+    by_rows = np.concatenate([
+        pq._sq8_scores(bounds, rq, codes[a:b], cnorm[a:b])
+        for a, b in zip(cuts, cuts[1:])
+    ], axis=1)
+    by_query = np.vstack([
+        pq._sq8_scores(bounds, rq[j : j + 1], codes, cnorm) for j in range(nq)
+    ])
+    assert whole.shape == (nq, n)
+    np.testing.assert_array_equal(by_rows, whole)
+    np.testing.assert_array_equal(by_query, whole)
