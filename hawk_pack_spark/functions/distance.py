@@ -52,6 +52,10 @@ def simhash_code(vec: Column | str, nbits: int = 63) -> Column:
 # float-vector metrics (ARRAY<FLOAT|DOUBLE> columns)
 
 
+# the smallest positive double: the clamp of cosine's denominator
+_MIN_POSITIVE = 5e-324
+
+
 def _as_double(v: Column) -> Column:
     return v.cast("array<double>")
 
@@ -88,7 +92,11 @@ def l2(a: Column | str, b: Column | str) -> Column:
 
 
 def cosine_sim(a: Column | str, b: Column | str) -> Column:
-    return dot(a, b) / (norm(a) * norm(b))
+    """dot(a, b) / (‖a‖·‖b‖). A zero vector has sim 0 (dist 1): its dot
+    is 0, and the denominator is clamped at the smallest positive
+    double, which leaves every nonzero denominator as it is — so no
+    division by zero under ANSI mode, and null inputs stay null."""
+    return dot(a, b) / F.greatest(norm(a) * norm(b), F.lit(_MIN_POSITIVE))
 
 
 def cosine_dist(a: Column | str, b: Column | str) -> Column:
@@ -112,14 +120,16 @@ def register_metric(name, expr_fn, batch_fn=None):
 
     - ``expr_fn(a: Column, b: Column) -> Column`` is ``eval_distance``
       as a JVM-side expression: it powers `distance_expr` everywhere —
-      exact kNN, the insert dup gate, delete bridge scoring, centroid
-      placement. ``is_match`` (dist <= threshold) and ``less_than``
-      (native ``<``) come for free, exactly as in SURVEY §2.1.
+      exact kNN, the insert dup gate, centroid placement. ``is_match``
+      (dist <= threshold) and ``less_than`` (native ``<``) come for
+      free, exactly as in SURVEY §2.1.
     - ``batch_fn(data: np.ndarray (n, dim) float64, q_idx: int,
       cand: sequence[int]) -> list[float]`` is ``eval_distance_batch``
-      for the partition-local HNSW kernel's beam search; required to
-      `build_index`/`search` with the custom metric, optional if only
-      the expression surfaces are needed.
+      for the partition-local HNSW kernel: its beam search, and the
+      bridge distances `delete_from_index` repairs a shard with;
+      required to `build_index`/`search`/`delete_from_index(metric=…)`
+      with the custom metric, optional if only the expression surfaces
+      are needed.
 
     Custom metrics ride the FLOAT payload (``vec``); the 64-bit code
     payload stays reserved for hamming. Centroid ROUTING

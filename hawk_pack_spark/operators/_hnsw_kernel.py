@@ -455,20 +455,32 @@ def _try_native_build(
     return True
 
 
+def flat_adjacency(index: LocalHNSW, ids: np.ndarray):
+    """The graph as `index_from_flat`'s input — per-node edge counts and
+    flat (e_layer, e_dst in GLOBAL ids, e_dist), an Arrow list column's
+    layout; a node's edges come layer by layer in ``adj`` key order."""
+    runs = [(node, lc, nbrs) for lc, nodes in index.adj.items() for node, nbrs in nodes.items()]
+    sizes = [len(nbrs) for _, _, nbrs in runs]
+    src = np.repeat(np.array([r[0] for r in runs], dtype=np.int64), sizes)
+    lay = np.repeat(np.array([r[1] for r in runs], dtype=np.int32), sizes)
+    order = np.argsort(src, kind="stable")
+    # (dist, local nbr) pairs; local ids are exact in float64
+    edges = np.array([e for _, _, nbrs in runs for e in nbrs], dtype=np.float64)
+    edges = edges.reshape(-1, 2)[order]
+    return (
+        np.bincount(src, minlength=len(ids)), lay[order],
+        ids[edges[:, 1].astype(np.int64)], edges[:, 0].copy(),
+    )
+
+
 def adjacency_arrays(index: LocalHNSW, ids: np.ndarray):
-    """Flatten the graph to per-node parallel arrays (e_layer, e_dst,
-    e_dist) in GLOBAL ids — the Arrow-friendly index storage layout."""
-    n = len(ids)
-    out_layers: list[list[int]] = [[] for _ in range(n)]
-    out_dsts: list[list[int]] = [[] for _ in range(n)]
-    out_dists: list[list[float]] = [[] for _ in range(n)]
-    for lc, nodes in index.adj.items():
-        for node, nbrs in nodes.items():
-            for d, nbr in nbrs:
-                out_layers[node].append(lc)
-                out_dsts[node].append(int(ids[nbr]))
-                out_dists[node].append(float(d))
-    return out_layers, out_dsts, out_dists
+    """Flatten the graph to per-node parallel lists (e_layer, e_dst,
+    e_dist) in GLOBAL ids: `flat_adjacency` split per node."""
+    counts, *flat = flat_adjacency(index, ids)
+    bounds = np.r_[0, np.cumsum(counts)].tolist()
+    return tuple(
+        [a[i:j].tolist() for i, j in zip(bounds[:-1], bounds[1:])] for a in flat
+    )
 
 
 def index_from_arrays(
@@ -619,3 +631,80 @@ def index_from_flat(
         index.entry = int(on_top[np.argmin(ids[on_top])])
         index.entry_layer = top
     return index
+
+
+def repair_deleted(ids: np.ndarray, counts: np.ndarray, e_layer: np.ndarray,
+                   e_dst: np.ndarray, e_dist: np.ndarray, dead: np.ndarray,
+                   params: HawkParams, score=None):
+    """Delete the ``dead`` nodes of one shard from its flat stored
+    adjacency (`index_from_flat`'s layout) and repair their
+    in-neighbours; returns (live mask, counts, e_layer, e_dst, e_dist)
+    of the survivors, in input order. A survivor with no edge into the
+    deleted set keeps its edges byte for byte. Any other loses those
+    edges and, with ``score`` (distances of local pairs ``a[i] →
+    b[i]``), gains forward-only bridges survivor → deleted → survivor
+    on the same layer (``src != dst``, each once; a stored edge wins
+    over its duplicate), then keeps each layer's ``M_max`` best by
+    (dist, dst) (``get_M_max(0)`` on layer 0, ``get_M_max(1)`` above);
+    its edges are written sorted by (layer, dist, dst). Reverse bridges
+    evict other nodes' only in-edges in the M_max competition (a 20k
+    clustered corpus deleting 10%: 16 unreachable survivors, against 1
+    forward-only); accumulated damage calls for a shard rebuild."""
+    n = len(ids)
+    src = np.repeat(np.arange(n, dtype=np.int64), counts)
+    dst = _local_ids(ids, e_dst)
+    gone = dead[dst]  # edges into the deleted set
+    redo = np.zeros(n, dtype=bool)
+    redo[src[gone]] = True
+    mine = (redo & ~dead)[src]  # the rewritten rows' edges
+    lay, s, t, d = (a[mine & ~gone] for a in (e_layer, src, dst, e_dist))
+    if score is not None and gone.any():
+        # bridges: each survivor's (layer, src → mid) into the deleted
+        # set joined with the mid's (layer, mid → dst) out of it
+        into, out = gone & ~dead[src], dead[src] & ~gone
+        width = int(e_layer.max()) + 1
+        o_key = src[out] * width + e_layer[out]
+        by_key = np.argsort(o_key, kind="stable")
+        o_key, o_dst = o_key[by_key], dst[out][by_key]
+        i_key = dst[into] * width + e_layer[into]
+        lo = np.searchsorted(o_key, i_key, "left")
+        reps = np.searchsorted(o_key, i_key, "right") - lo
+        b_dst = o_dst[np.repeat(lo - np.cumsum(reps) + reps, reps) + np.arange(reps.sum())]
+        b_src = np.repeat(src[into], reps)
+        b_lay = np.repeat(e_layer[into].astype(np.int64), reps)
+        ok = b_src != b_dst
+        pair = np.unique((b_lay[ok] * n + b_src[ok]) * n + b_dst[ok])
+        lay = np.r_[lay, (pair // (n * n)).astype(lay.dtype)]
+        s, t = np.r_[s, pair // n % n], np.r_[t, pair % n]
+        d = np.r_[d, np.asarray(score(pair // n % n, pair % n), dtype=np.float64)]
+        # the stable sort keeps a stored edge ahead of its duplicate bridge
+        o = np.lexsort((t, lay, s))
+        o = o[_new_run(s[o], lay[o], t[o])]
+        lay, s, t, d = lay[o], s[o], t[o], d[o]
+    o = np.lexsort((ids[t], d, lay, s))
+    lay, s, t, d = lay[o], s[o], t[o], d[o]
+    if score is not None and len(s):
+        # re-trim every (layer, node) run of the rewritten rows to M_max
+        start = np.flatnonzero(_new_run(s, lay))
+        rank = np.arange(len(s)) - np.repeat(start, np.diff(np.r_[start, len(s)]))
+        keep = rank < np.where(lay == 0, params.get_M_max(0), params.get_M_max(1))
+        lay, s, t, d = lay[keep], s[keep], t[keep], d[keep]
+    calm = ~(mine | dead[src])
+    out_src = np.r_[src[calm], s]
+    order = np.argsort(out_src, kind="stable")
+    return (
+        ~dead,
+        np.bincount(out_src, minlength=n)[~dead],
+        np.r_[e_layer[calm], lay][order],
+        np.r_[e_dst[calm], ids[t]][order],
+        np.r_[e_dist[calm], d][order],
+    )
+
+
+def _new_run(*keys: np.ndarray) -> np.ndarray:
+    """True where sorted ``keys`` start a new run of equal tuples."""
+    head = np.zeros(len(keys[0]), dtype=bool)
+    head[:1] = True
+    for k in keys:
+        head[1:] |= k[1:] != k[:-1]
+    return head

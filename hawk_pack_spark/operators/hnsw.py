@@ -8,9 +8,12 @@ payload, its assigned max layer and its adjacency as parallel arrays
     shard INT, vec_id LONG, layer INT, code LONG, vec ARRAY<DOUBLE>,
     e_layer ARRAY<INT>, e_dst ARRAY<LONG>, e_dist ARRAY<DOUBLE>
 
-Build: hash-shard vectors, then one `applyInPandas` builds each shard's
-graph independently (sequential insertion inside the shard — the
-reference engine is serial by design; shards give the parallelism).
+Writers rewrite whole shards in Python tasks over Arrow: rehydrate
+from the list columns' flat values (`_rehydrate`), run the kernel,
+write back through one emitter (`_index_table`). Builds are one
+`groupBy().applyInArrow` (serial insertion inside a shard, as in the
+reference; shards give the parallelism); insert and delete are ONE
+`cogroup().applyInArrow` over the touched shards (`_rewrite_shards`).
 
 Search has two physical shapes over the same Arrow-native per-shard
 kernel call (`_search_shard`: rehydrate the shard from its list
@@ -48,13 +51,14 @@ from __future__ import annotations
 import os
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from hawk_pack_spark.config import DEFAULT_PARAMS, HawkParams
+from hawk_pack_spark.functions.distance import _MIN_POSITIVE
 from hawk_pack_spark.operators import _hnsw_kernel as K
+from hawk_pack_spark.operators.materialize import materialize
 from hawk_pack_spark.operators.similarity import _collect_query_batch
 from hawk_pack_spark.operators.topk import (
     RESULT_SCHEMA,
@@ -76,12 +80,7 @@ MAX_DRIVER_QUERIES = 100_000
 
 # the index columns one shard search reads, besides its payload column
 _SHARD_COLS = ["shard", "vec_id", "layer", "e_layer", "e_dst", "e_dist"]
-
-
-def _payload(pdf: pd.DataFrame, metric: str) -> np.ndarray:
-    if metric == "hamming":
-        return pdf["code"].to_numpy(dtype=np.int64).view(np.uint64)
-    return np.asarray([np.asarray(v, dtype=np.float64) for v in pdf["vec"]])
+_INDEX_COLS = [f.split()[0] for f in INDEX_SCHEMA.split(", ")]
 
 
 def _stack_payload(a: np.ndarray, b: np.ndarray, metric: str) -> np.ndarray:
@@ -111,6 +110,126 @@ def _arrow_payload(rows: pa.Table, metric: str) -> np.ndarray:
     return values.astype(np.float64, copy=False).reshape(len(lens), -1)
 
 
+def _flat_edges(rows: pa.Table):
+    """(counts, e_layer, e_dst, e_dist) of index rows: their adjacency
+    as `K.index_from_flat` reads it, straight from the list columns."""
+    counts, e_layer = _flat(rows.column("e_layer"))
+    _, e_dst = _flat(rows.column("e_dst"))
+    _, e_dist = _flat(rows.column("e_dist"))
+    return counts, e_layer, e_dst, e_dist
+
+
+def _rehydrate(rows: pa.Table, data: np.ndarray, metric: str,
+               params: HawkParams, **kw) -> K.LocalHNSW:
+    """The graph of one shard's index rows (local index = row position),
+    over the payload ``data`` (the rows' payload, possibly followed by
+    staged vectors)."""
+    return K.index_from_flat(
+        rows.column("vec_id").to_numpy(), data, metric, params,
+        *_flat_edges(rows), layers=rows.column("layer").to_numpy(), **kw,
+    )
+
+
+def _index_table(rows: pa.Table, layers, counts, e_layer, e_dst, e_dist) -> pa.Table:
+    """INDEX_SCHEMA rows: ``rows``' shard, vec_id and payload columns as
+    they are, ``layers``, and the adjacency list columns built from the
+    flat values and per-row ``counts``."""
+    offsets = pa.array(np.r_[0, np.cumsum(counts)], pa.int32())
+    lists = [
+        pa.ListArray.from_arrays(offsets, pa.array(values, typ))
+        for values, typ in ((e_layer, pa.int32()), (e_dst, pa.int64()), (e_dist, pa.float64()))
+    ]
+    return pa.Table.from_arrays([
+        rows.column("shard"), rows.column("vec_id"), pa.array(np.asarray(layers), pa.int32()),
+        rows.column("code"), rows.column("vec"), *lists,
+    ], names=_INDEX_COLS)
+
+
+def _build_table(rows: pa.Table, metric: str, params: HawkParams, seed: int,
+                 neighbor_heuristic: bool) -> pa.Table:
+    """One shard built from its payload rows (shard, vec_id, code, vec):
+    splitmix64 layers, `K.build_local` in vec_id order."""
+    rows = rows.sort_by("vec_id")
+    ids = rows.column("vec_id").to_numpy()
+    layers = K.assign_layer(K.uniform_from_ids(ids, seed), params.m_L)
+    index = K.build_local(ids, _arrow_payload(rows, metric), metric, params,
+                          layers=layers, neighbor_heuristic=neighbor_heuristic)
+    return _index_table(rows, layers, *K.flat_adjacency(index, ids))
+
+
+def _build_shards(rows: DataFrame, num_shards: int, metric: str,
+                  params: HawkParams, seed: int,
+                  neighbor_heuristic: bool) -> DataFrame:
+    """`_build_table` over every shard of ``rows``, one
+    `groupBy().applyInArrow` group per shard."""
+    # explicit repartition: AQE's partition coalescing sees tiny shuffle
+    # bytes and would merge the CPU-heavy kernel groups into few tasks,
+    # serializing the build; user-specified partition counts are exempt
+    # user-registered metrics live in driver module state; the kernel
+    # runs in worker processes, so the registry rides the closure
+    custom = dict(K.CUSTOM_BATCH)
+
+    def build(shard: pa.Table) -> pa.Table:
+        K.CUSTOM_BATCH.update(custom)
+        return _build_table(shard, metric, params, seed, neighbor_heuristic)
+
+    return rows.repartition(num_shards, "shard").groupBy("shard").applyInArrow(
+        build, INDEX_SCHEMA
+    )
+
+
+def _rewrite_shards(index_df: DataFrame, side: DataFrame, rewrite,
+                    num_shards: int | None = None) -> tuple[list, DataFrame]:
+    """(touched shards, updated index): ONE `cogroup().applyInArrow`
+    stage pairs each shard ``side`` has rows for with those rows, and
+    ``rewrite(index_rows, side_rows)`` returns its new rows; untouched
+    shards pass through JVM-side. ``side`` is read twice."""
+    touched = sorted(r[0] for r in side.select("shard").distinct().collect())
+    if not touched:
+        return touched, index_df
+    custom = dict(K.CUSTOM_BATCH)
+
+    def run(left: pa.Table, right: pa.Table) -> pa.Table:
+        K.CUSTOM_BATCH.update(custom)
+        return rewrite(left, right)
+
+    n = len(touched)
+    updated = (
+        index_df.where(F.col("shard").isin(touched)).select(*_INDEX_COLS)
+        .repartition(n, "shard").groupBy("shard")
+        .cogroup(side.repartition(n, "shard").groupBy("shard"))
+        .applyInArrow(run, INDEX_SCHEMA)
+    )
+    if n == num_shards:
+        return touched, updated
+    return touched, index_df.where(~F.col("shard").isin(touched)).unionByName(updated)
+
+
+def _float_dists(a: np.ndarray, b: np.ndarray, metric: str) -> np.ndarray:
+    """``distance_expr(metric)`` of (broadcast) float rows, bit-identical:
+    its fold order (`topk.fold_lr`), and cosine's denominator clamped as
+    in ``functions/distance.py::cosine_sim`` (a zero vector: dist 1)."""
+    if metric == "l2_sq":
+        return l2_fold(a, b)
+    if metric == "dot":
+        return -fold_lr(a, b)
+    den = np.sqrt(fold_lr(a, a)) * np.sqrt(fold_lr(b, b))
+    return 1.0 - fold_lr(a, b) / np.maximum(den, _MIN_POSITIVE)
+
+
+def _pair_dists(data: np.ndarray, a: np.ndarray, b: np.ndarray, metric: str) -> np.ndarray:
+    """Delete's bridge scorer, ``data[a[i]]`` to ``data[b[i]]``: as
+    ``distance_expr`` for the built-in metrics, a custom metric's
+    registered ``batch_fn`` through `K.Metric`."""
+    if metric == "hamming":
+        return K.popcount64(data[a] ^ data[b]).astype(np.float64)
+    if metric in ("l2_sq", "cosine", "dot"):
+        return _float_dists(data[a], data[b], metric)
+    batch = K.Metric(metric, data).batch
+    return np.array([batch(i, [j])[0] for i, j in zip(a.tolist(), b.tolist())],
+                    dtype=np.float64)
+
+
 def _search_shard(
     rows: pa.Table,
     q_ids: np.ndarray,
@@ -127,13 +246,9 @@ def _search_shard(
     prepare_query id space — and ``search_batch`` runs once. Returns
     (query_id, vec_id, dist) arrays, at most k hits per query."""
     ids = rows.column("vec_id").to_numpy()
-    counts, e_layer = _flat(rows.column("e_layer"))
-    _, e_dst = _flat(rows.column("e_dst"))
-    _, e_dist = _flat(rows.column("e_dist"))
-    index = K.index_from_flat(
-        ids, _stack_payload(_arrow_payload(rows, metric), q_data, metric),
-        metric, params, counts, e_layer, e_dst, e_dist,
-        layers=rows.column("layer").to_numpy(),
+    index = _rehydrate(
+        rows, _stack_payload(_arrow_payload(rows, metric), q_data, metric),
+        metric, params,
         frozen=True,  # search-only: CSR rehydration, no tuple lists
     )
     n = len(ids)
@@ -147,13 +262,8 @@ def _route_dists(q_data: np.ndarray, c_mat: np.ndarray, metric: str) -> np.ndarr
     mirror ``functions/distance.py`` expression-for-expression. Supports
     exactly the metrics the search kernel supports; anything else raises
     instead of silently routing by the wrong geometry."""
-    if metric == "l2_sq":
-        return l2_fold(q_data[:, None, :], c_mat[None, :, :])
-    if metric == "cosine":
-        dots = fold_lr(q_data[:, None, :], c_mat[None, :, :])
-        qn = np.sqrt(fold_lr(q_data, q_data))
-        cn = np.sqrt(fold_lr(c_mat, c_mat))
-        return 1.0 - dots / (qn[:, None] * cn[None, :])
+    if metric in ("l2_sq", "cosine"):
+        return _float_dists(q_data[:, None, :], c_mat[None, :, :], metric)
     raise NotImplementedError(
         f"centroid routing for metric {metric!r} is not implemented; "
         "supported: 'l2_sq', 'cosine', 'hamming'"
@@ -192,23 +302,6 @@ def _route_batch(
     return routed
 
 
-def _emit_index(shard: int, ids: np.ndarray, pdf: pd.DataFrame, metric: str,
-                layers: np.ndarray, index: K.LocalHNSW) -> pd.DataFrame:
-    e_layer, e_dst, e_dist = K.adjacency_arrays(index, ids)
-    return pd.DataFrame(
-        {
-            "shard": shard,
-            "vec_id": ids,
-            "layer": layers,
-            "code": pdf["code"].to_numpy() if metric == "hamming" else None,
-            "vec": pdf["vec"] if metric != "hamming" else None,
-            "e_layer": e_layer,
-            "e_dst": e_dst,
-            "e_dist": e_dist,
-        }
-    )
-
-
 def _normalize_vectors(
     df: DataFrame, id_col: str, vec_col: str, metric: str, out_id: str = "vec_id"
 ) -> DataFrame:
@@ -235,7 +328,7 @@ def balance_assignments(
     """Split oversized content cells into hash sub-shards.
 
     K-means cells are uneven; a kernel task owns a whole shard, so one
-    hot cell serializes the build/search stage (applyInPandas groups
+    hot cell serializes the build/search stage (applyInArrow groups
     can't be split by AQE). Cells larger than ``max_cell`` are salted
     into ceil(size/max_cell) sub-shards; sub-shard ids are dense-packed
     after the original id space. Search routing is unaffected: centroids
@@ -248,9 +341,7 @@ def balance_assignments(
     # typical caller feeds it a k-means assignment whose lineage is a
     # full ML-transform scoring pass over the corpus — un-checkpointed,
     # that pass ran 3x (guide §5: reuse beats recompute; ~16 bytes/row)
-    assignments = assignments.select(
-        F.col(id_col), F.col(shard_col)
-    ).localCheckpoint()
+    assignments = materialize(assignments.select(F.col(id_col), F.col(shard_col)))
     sizes = assignments.groupBy(shard_col).agg(F.count(F.lit(1)).alias("_sz"))
     base = 1 + (assignments.agg(F.max(shard_col)).collect()[0][0] or 0)
     splits = (
@@ -345,26 +436,8 @@ def build_index(
         prepped = _normalize_vectors(vectors, id_col, vec_col, metric).withColumn(
             "shard", F.pmod(F.xxhash64("vec_id"), F.lit(num_shards)).cast("int")
         )
-    # explicit repartition: AQE's partition coalescing sees tiny shuffle
-    # bytes and would merge the CPU-heavy kernel groups into few tasks,
-    # serializing the build; user-specified partition counts are exempt
-    prepped = prepped.repartition(num_shards, "shard")
-    # user-registered metrics live in driver module state; the kernel
-    # runs in worker processes, so the registry rides the closure
-    _custom = dict(K.CUSTOM_BATCH)
-
-    def build_shard(pdf: pd.DataFrame) -> pd.DataFrame:
-        K.CUSTOM_BATCH.update(_custom)
-        pdf = pdf.sort_values("vec_id").reset_index(drop=True)
-        shard = int(pdf["shard"].iloc[0])
-        ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-        data = _payload(pdf, metric)
-        layers = K.assign_layer(K.uniform_from_ids(ids, seed), params.m_L)
-        index = K.build_local(ids, data, metric, params, layers=layers,
-                              neighbor_heuristic=neighbor_heuristic)
-        return _emit_index(shard, ids, pdf, metric, layers, index)
-
-    return prepped.groupBy("shard").applyInPandas(build_shard, INDEX_SCHEMA)
+    return _build_shards(prepped, num_shards, metric, params, seed,
+                         neighbor_heuristic)
 
 
 def fragmented_shards(
@@ -424,24 +497,8 @@ def rebuild_shards(
     todo = index_df.where(F.col("shard").isin(list(shards))).select(
         "shard", "vec_id", "code", "vec"
     )
-    _custom = dict(K.CUSTOM_BATCH)
-
-    def build_shard(pdf: pd.DataFrame) -> pd.DataFrame:
-        K.CUSTOM_BATCH.update(_custom)
-        pdf = pdf.sort_values("vec_id").reset_index(drop=True)
-        shard = int(pdf["shard"].iloc[0])
-        ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-        data = _payload(pdf, metric)
-        layers = K.assign_layer(K.uniform_from_ids(ids, seed), params.m_L)
-        index = K.build_local(ids, data, metric, params, layers=layers,
-                              neighbor_heuristic=neighbor_heuristic)
-        return _emit_index(shard, ids, pdf, metric, layers, index)
-
-    rebuilt = (
-        todo.repartition(len(shards), "shard")
-        .groupBy("shard")
-        .applyInPandas(build_shard, INDEX_SCHEMA)
-    )
+    rebuilt = _build_shards(todo, len(shards), metric, params, seed,
+                            neighbor_heuristic)
     return index_df.where(~F.col("shard").isin(list(shards))).unionByName(
         rebuilt
     )
@@ -555,7 +612,7 @@ def search_serving(
 
     Requirements: index partitions must contain whole shards (true for
     ``build_index`` output and anything ``repartition(n, "shard")``-ed
-    before checkpointing — applyInPandas output keeps its grouping
+    before checkpointing — applyInArrow output keeps its grouping
     physically); coalescing only merges partitions, so it keeps them
     whole. ``centroids`` is ``shard_centroids(index).collect()``
     — num_shards rows of build-time serving metadata; memoized on the
@@ -1051,41 +1108,22 @@ def insert_batch(
             "shard", F.pmod(F.xxhash64("vec_id"), F.lit(num_shards)).cast("int")
         )
 
-    _custom = dict(K.CUSTOM_BATCH)
+    cols = ["shard", "vec_id", "code", "vec"]
 
-    def insert_shard(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        K.CUSTOM_BATCH.update(_custom)
-        if left.empty and right.empty:
-            return pd.DataFrame(
-                columns=[f.split()[0] for f in INDEX_SCHEMA.split(", ")]
-            )
-        shard = int((left if not left.empty else right)["shard"].iloc[0])
-        if left.empty:
+    def insert_shard(left: pa.Table, right: pa.Table) -> pa.Table:
+        right = right.sort_by("vec_id")
+        if left.num_rows == 0:
             # no existing rows in this shard: plain build over the batch
-            pdf = right.sort_values("vec_id").reset_index(drop=True)
-            ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            data = _payload(pdf, metric)
-            layers = K.assign_layer(K.uniform_from_ids(ids, seed), params.m_L)
-            index = K.build_local(ids, data, metric, params, layers=layers,
-                                  neighbor_heuristic=neighbor_heuristic)
-            return _emit_index(shard, ids, pdf, metric, layers, index)
-
-        left = left.sort_values("vec_id").reset_index(drop=True)
-        old_ids = left["vec_id"].to_numpy(dtype=np.int64)
-        old_layers = left["layer"].to_numpy(dtype=np.int32)
-        data = _payload(left, metric)
-        if right.empty:
-            return left
-
-        right = right.sort_values("vec_id").reset_index(drop=True)
-        new_ids = right["vec_id"].to_numpy(dtype=np.int64)
+            return _build_table(right, metric, params, seed, neighbor_heuristic)
+        left = left.sort_by("vec_id")
+        old_ids = left.column("vec_id").to_numpy()
+        new_ids = right.column("vec_id").to_numpy()
         new_layers = K.assign_layer(K.uniform_from_ids(new_ids, seed), params.m_L)
-        full = _stack_payload(data, _payload(right, metric), metric)
-        index = K.index_from_arrays(
-            old_ids, full, metric, params,
-            left["e_layer"].tolist(), left["e_dst"].tolist(), left["e_dist"].tolist(),
-            layers=old_layers, neighbor_heuristic=neighbor_heuristic,
+        full = _stack_payload(
+            _arrow_payload(left, metric), _arrow_payload(right, metric), metric
         )
+        index = _rehydrate(left, full, metric, params,
+                           neighbor_heuristic=neighbor_heuristic)
         n = len(old_ids)
         accepted = []
         for j in range(len(new_ids)):
@@ -1097,55 +1135,25 @@ def insert_batch(
             index.insert(local, int(new_layers[j]))
             accepted.append(j)
 
-        all_ids = np.concatenate([old_ids, new_ids[accepted]])
-        all_layers = np.concatenate([old_layers, new_layers[accepted]])
-        keep = pd.concat(
-            [left[["code", "vec"]], right.iloc[accepted][["code", "vec"]]],
-            ignore_index=True,
-        )
-        # adjacency_arrays needs ids for n + len(accepted) locals, but the
-        # index still holds staged-but-rejected locals; remap via the id
-        # vector covering every local that can appear in adjacency
-        id_map = np.concatenate([old_ids, new_ids])  # locals n..n+m-1
-        e_layer, e_dst, e_dist = K.adjacency_arrays(index, id_map)
-        kept_locals = list(range(n)) + [n + j for j in accepted]
-        return pd.DataFrame(
-            {
-                "shard": shard,
-                "vec_id": all_ids,
-                "layer": all_layers,
-                "code": keep["code"].to_numpy() if metric == "hamming" else None,
-                "vec": keep["vec"] if metric != "hamming" else None,
-                "e_layer": [e_layer[i] for i in kept_locals],
-                "e_dst": [e_dst[i] for i in kept_locals],
-                "e_dist": [e_dist[i] for i in kept_locals],
-            }
-        )
+        # rejected locals were staged but never linked: no edges
+        counts, *edges = K.flat_adjacency(index, np.r_[old_ids, new_ids])
+        kept = np.r_[np.arange(n), n + np.asarray(accepted, dtype=np.int64)]
+        rows = pa.concat_tables([left.select(cols), right.select(cols)]).take(kept)
+        layers = np.r_[left.column("layer").to_numpy(), new_layers][kept]
+        return _index_table(rows, layers, counts[kept], *edges)
 
-    # touched-shard split: only shards that actually receive batch rows
-    # go through the kernel; untouched shards pass through JVM-side with
-    # no Arrow round-trip. With id-hashed placement a small batch
-    # touches ≤len(batch) of the shards, so at serving scale (thousands
-    # of shards) the rewrite cost tracks the BATCH, not the index.
-    # prepped is checkpointed first so the phase-1 dedup search (when
-    # match_threshold is set) runs once, not once per reference.
-    prepped = prepped.localCheckpoint()
-    touched = [r[0] for r in prepped.select("shard").distinct().collect()]
+    # only shards receiving batch rows are rewritten, so the cost tracks
+    # the BATCH, not the index; prepped is materialized first so the
+    # phase-1 dedup search runs once, not once per reference
+    touched, updated = _rewrite_shards(
+        index_df, materialize(prepped), insert_shard, num_shards
+    )
     if touched_out is not None:
         # which shards' subgraphs this insert rewrote — the delta unit
         # for incremental persistence (upsert_graph_jdbc of these shards
         # only; everything else is bit-identical to the prior state)
-        touched_out["shards"] = sorted(touched)
-    idx_touched = index_df.where(F.col("shard").isin(touched))
-    updated = (
-        idx_touched.repartition(len(touched) or 1, "shard")
-        .groupBy("shard")
-        .cogroup(prepped.repartition(len(touched) or 1, "shard").groupBy("shard"))
-        .applyInPandas(insert_shard, INDEX_SCHEMA)
-    )
-    if len(touched) == num_shards:
-        return updated
-    return index_df.where(~F.col("shard").isin(touched)).unionByName(updated)
+        touched_out["shards"] = touched
+    return updated
 
 
 # ---------------------------------------------------------------------------
@@ -1157,142 +1165,37 @@ def delete_from_index(index_df: DataFrame, delete_ids: DataFrame,
                       params: HawkParams = DEFAULT_PARAMS) -> DataFrame:
     """Index maintenance the reference leaves out: remove vectors, prune
     every edge pointing at them, and (when ``metric`` is given) repair
-    connectivity by BRIDGING — each survivor that pointed at a deleted
-    node inherits that node's surviving out-neighbors (with freshly
-    computed distances), then every adjacency re-trims to M_max. This is
-    the standard local delete-repair of incremental ANN systems (e.g.
-    FreshDiskANN's delete consolidation): deleted nodes were on search
-    paths, so their in/out neighbors are stitched together to keep those
-    paths alive without a rebuild.
+    connectivity by BRIDGING each survivor that pointed at a deleted
+    node to that node's surviving out-neighbors, then re-trim to M_max —
+    FreshDiskANN-style local delete consolidation. Edges never cross
+    shards, so ONE `cogroup().applyInArrow` stage runs the repair kernel
+    (`_hnsw_kernel.repair_deleted`, which states the rule) over each
+    shard holding a deleted vector; the rest pass through JVM-side.
+    Bridge distances are bit-identical to ``distance_expr(metric)`` for
+    the built-in metrics (`_pair_dists`); a custom metric's come from
+    its registered ``batch_fn``. Entry points are re-derived as each
+    shard's max-layer survivor (`entry_points`). Deletion is exact and
+    immediate; without repair (metric=None) recall on survivors can
+    degrade, and heavy churn still warrants `rebuild_shards`."""
+    dels = delete_ids.select(F.col(id_col).cast("long").alias("vec_id")).distinct()
+    # (shard, vec_id) of the deleted rows; fresh aliases keep the cogroup
+    # of index rows with them from being an ambiguous self-join
+    hit = index_df.select(
+        F.col("shard").alias("shard"), F.col("vec_id").alias("vec_id")
+    ).join(dels, "vec_id", "left_semi")
 
-    Everything is joins + a Window re-trim — no kernel. Entry points
-    need no bookkeeping: they are always re-derived as each shard's
-    max-layer survivor (`entry_points`). Deletion is exact and
-    immediate — a deleted id can never appear in results. Without
-    repair (metric=None) recall on survivors can degrade; heavy churn
-    still warrants periodic shard rebuild."""
-    from pyspark.sql import Window
+    def delete_shard(left: pa.Table, right: pa.Table) -> pa.Table:
+        ids = left.column("vec_id").to_numpy()
+        dead = np.isin(ids, right.column("vec_id").to_numpy())
+        score = None
+        if metric is not None:
+            data = _arrow_payload(left, metric)
+            score = lambda a, b: _pair_dists(data, a, b, metric)  # noqa: E731
+        live, *edges = K.repair_deleted(ids, *_flat_edges(left), dead, params, score)
+        rows = left.filter(pa.array(live))
+        return _index_table(rows, rows.column("layer").to_numpy(), *edges)
 
-    from hawk_pack_spark.functions.distance import distance_expr
-    from hawk_pack_spark.operators.hnsw_driver import _assemble_index
-
-    dels = delete_ids.select(
-        F.col(id_col).cast("long").alias("vec_id")
-    ).distinct()
-    # Two-level blast-radius split (measured at 1M/266 shards for a
-    # 100-id delete: 32.9s whole-index → 14.8s shard-split → 11.2s with
-    # the row split; the remaining floor is the one discovery pass over
-    # the touched shards' edges plus the pass-through unions):
-    # 1. touched SHARDS: edges never cross shards (each shard is an
-    #    independent graph), so only shards CONTAINING a deleted vector
-    #    can change — the rest pass through JVM-side untouched.
-    # 2. affected ROWS within touched shards: a survivor's adjacency
-    #    changes only if it POINTS AT a deleted node (it loses that edge
-    #    and may inherit bridges). Survivors with no edge into the
-    #    deleted set keep their arrays verbatim — one cheap projection
-    #    (explode + broadcast semi-join) finds the affected set, and the
-    #    join/re-trim/re-assembly machinery runs on that neighborhood
-    #    only. Repair cost tracks the DELETED SET's in-neighborhood,
-    #    not the index.
-    touched = [
-        r[0]
-        for r in index_df.join(dels, "vec_id", "left_semi")
-        .select("shard")
-        .distinct()
-        .collect()
-    ]
-    untouched = index_df.where(~F.col("shard").isin(touched))
-    tdf = index_df.where(F.col("shard").isin(touched))
-    del_dst = dels.select(F.col("vec_id").alias("dst"))
-    # materialize the discovery pass ONCE: aff_ids is read by both the
-    # work semi-join and the calm anti-join, and work by the kept
-    # projection plus three edge consumers — without the barriers the
-    # touched-shard edge explode re-runs per consumer (guide §5). Both
-    # frames are affected-neighborhood-sized, not index-sized.
-    aff_ids = (
-        tdf.select("vec_id", F.explode("e_dst").alias("dst"))
-        .join(F.broadcast(del_dst), "dst", "left_semi")
-        .select("vec_id")
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    work = tdf.join(
-        aff_ids.unionByName(dels).distinct(), "vec_id", "left_semi"
-    ).localCheckpoint(eager=True)
-    calm = tdf.join(dels, "vec_id", "left_anti").join(
-        aff_ids, "vec_id", "left_anti"
-    )
-    kept = work.join(dels, "vec_id", "left_anti")
-    all_edges = (
-        work.select(
-            "shard", F.col("vec_id").alias("src"),
-            F.explode(F.arrays_zip("e_layer", "e_dst", "e_dist")).alias("e"),
-        )
-        .select(
-            "shard", F.col("e.e_layer").alias("layer"), "src",
-            F.col("e.e_dst").alias("dst"), F.col("e.e_dist").alias("dist"),
-        )
-    )
-    del_src = dels.select(F.col("vec_id").alias("src"))
-    edges = all_edges.join(del_src, "src", "left_anti").join(
-        del_dst, "dst", "left_anti"
-    )
-    if metric is not None:
-        # bridge: survivor --x--> deleted --> survivor becomes
-        # survivor --> survivor, scored with a real distance
-        into_del = all_edges.join(del_src, "src", "left_anti").join(
-            del_dst, "dst", "left_semi"
-        ).select("shard", "layer", "src", F.col("dst").alias("mid"))
-        out_of_del = all_edges.join(del_dst, "dst", "left_anti").select(
-            "shard", "layer", F.col("src").alias("mid"), "dst"
-        )
-        payload = _payload_col(metric)
-        # bridge endpoints can be CALM survivors (a deleted node's
-        # out-neighbor needn't point back), so payloads come from every
-        # touched-shard survivor, not just the affected set
-        pay = tdf.join(dels, "vec_id", "left_anti").select(
-            F.col("vec_id"), F.col(payload).alias("_p")
-        )
-        bridges = (
-            into_del.join(out_of_del, ["shard", "layer", "mid"])
-            .where(F.col("src") != F.col("dst"))
-            .select("shard", "layer", "src", "dst")
-            .distinct()
-            .join(pay.select(F.col("vec_id").alias("src"),
-                             F.col("_p").alias("_ps")), "src")
-            .join(pay.select(F.col("vec_id").alias("dst"),
-                             F.col("_p").alias("_pd")), "dst")
-            .select(
-                "shard", "layer", "src", "dst",
-                distance_expr(metric, F.col("_ps"), F.col("_pd")).alias("dist"),
-            )
-        )
-        # Bridges are FORWARD-only, deliberately. Bidirectional bridging
-        # (the connect_bidir shape) was measured at the r6 sf1 gate on a
-        # 20k clustered corpus deleting 10%: the reverse edges densify
-        # the M_max re-trim competition and EVICT other nodes' only
-        # in-edges — 16 unreachable survivors vs 1 with forward-only.
-        # Repair is approximate by contract (see docstring); the exact
-        # path for accumulated damage is fragmented_shards +
-        # rebuild_shards.
-        m_max0, m_max = params.get_M_max(0), params.get_M_max(1)
-        w = Window.partitionBy("shard", "layer", "src").orderBy(
-            F.col("dist").asc(), F.col("dst").asc()
-        )
-        edges = (
-            edges.unionByName(bridges)
-            .dropDuplicates(["shard", "layer", "src", "dst"])
-            .withColumn("_rn", F.row_number().over(w))
-            .where(
-                F.col("_rn")
-                <= F.when(F.col("layer") == 0, F.lit(m_max0)).otherwise(F.lit(m_max))
-            )
-            .drop("_rn")
-        )
-    repaired = _assemble_index(
-        kept.select("shard", "vec_id", "layer", "code", "vec"), edges
-    )
-    return untouched.unionByName(calm).unionByName(repaired)
+    return _rewrite_shards(index_df, hit, delete_shard)[1]
 
 
 def to_links(index_df: DataFrame) -> DataFrame:

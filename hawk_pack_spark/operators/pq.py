@@ -35,8 +35,9 @@ does not depend on the corpus shape. IVF variants encode RESIDUALS
      broadcast join and scores them there in ``distance_expr``'s fold
      order. A search is ONE Python stage, run when it is called.
 
-  Scorers: `_adc_scores` (PQ ADC — per-subspace LUT in m matmuls, then
-  an m-gather sum in subspace order; no float vector is read),
+  Scorers: `_adc_scores` (PQ ADC — per-subspace LUT folded in a fixed
+  order, then an m-gather sum in subspace order; no float vector is
+  read, and a distance does not depend on tiling or partitioning),
   `_sq8_scores` (asymmetric SQ8 — the expanded form over the encode-
   time ``cnorm``, one fixed-grid float64 dot on the code tile, exact
   in any BLAS blocking, so an SQ8 distance does not depend on tiling
@@ -74,6 +75,7 @@ from hawk_pack_spark.operators.similarity import (
 from hawk_pack_spark.operators.topk import (
     RESULT_SCHEMA,
     SEARCH_SCHEMA,
+    fold_lr,
     hits_table,
     l2_fold,
     merge_topk,
@@ -277,16 +279,18 @@ def ivfpq_build(
 
 def _adc_scores(codebooks, rq, codes):
     """PQ asymmetric distances (nq, n): per subspace i, the LUT
-    ``lut[j, c] = ||rq[j, sub_i] − cb[i, c]||²`` for the whole query
-    block in one matmul, then ``d += lut[:, codes[:, i]]`` in subspace
-    order — one summation order for flat and IVF scans."""
+    ``lut[j, c] = ||rq[j, sub_i] − cb[i, c]||²`` in expanded form with
+    the query terms folded left to right (`topk.fold_lr` — a matmul
+    rounds an entry by the block's shape), then ``d += lut[:, codes[:,
+    i]]`` in subspace order: a distance depends on its (query, code)
+    pair alone, for flat and IVF scans at any tiling."""
     m, _, sub = codebooks.shape
     d = np.zeros((len(rq), len(codes)), dtype=np.float64)
     for i in range(m):
         part, cb = rq[:, i * sub : (i + 1) * sub], codebooks[i]
         lut = (
-            (part * part).sum(1)[:, None]
-            - 2.0 * part @ cb.T
+            fold_lr(part, part)[:, None]
+            - 2.0 * fold_lr(part[:, None, :], cb[None, :, :])
             + (cb * cb).sum(1)[None, :]
         )
         d += lut[:, codes[:, i]]

@@ -63,3 +63,32 @@ def assert_cell_pruned_scan(plans: list[str]) -> None:
     scans = [p for p in plans if "MapInArrow" in p]
     assert len(scans) == 1, plans
     assert re.search(r"PartitionFilters: \[[^\]]*cell", scans[0]), scans[0]
+
+
+# plan nodes that run Python workers (Arrow/pandas UDF execs)
+PYTHON_SCOPE = re.compile(r"InArrow|InPandas|EvalPython")
+
+
+def group_stage_scopes(sc, group: str) -> list[list[str]]:
+    """The operation scopes — SQL plan nodes and RDD operations, the
+    boxes of the UI's stage DAG — of every stage the job group ran, in
+    stage-id order, skipped stages left out."""
+    group_jobs_and_stage_tasks(sc, group)  # waits for the group to finish
+    st = sc.statusTracker()
+    store = sc._jsc.sc().statusStore()
+    stages = sorted(
+        {s for j in st.getJobIdsForGroup(group) for s in st.getJobInfo(j).stageIds}
+    )
+    scopes = []
+    for s in stages:
+        if st.getStageInfo(s).numCompletedTasks == 0:
+            continue  # skipped: its shuffle output was reused
+        names, todo = [], [store.operationGraphForStage(s).rootCluster()]
+        while todo:
+            cluster = todo.pop()
+            names.append(cluster.name())
+            children = cluster.childClusters().iterator()
+            while children.hasNext():
+                todo.append(children.next())
+        scopes.append(names)
+    return scopes

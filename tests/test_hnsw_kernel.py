@@ -6,6 +6,8 @@ determinism, self-recall E2E, dedup via is_match, entry monotonicity.
 
 from __future__ import annotations
 
+import math
+
 import numpy as np
 import pytest
 
@@ -488,3 +490,103 @@ def test_rehydration_parity_flat_core_and_list_adapter(spark, monkeypatch):
             rows = table.filter(pc.equal(table["shard"], shard)).sort_by("vec_id")
             assert rows.num_rows > 100
             assert _assert_rehydration_parity(rows, params, monkeypatch)
+
+
+def _fold_dist(metric: str, a, b) -> float:
+    """``distance_expr(metric)`` of two payloads in plain Python floats:
+    the expression's left-to-right fold, a zero vector at cosine sim 0."""
+    if metric == "hamming":
+        return float(bin(int(a) ^ int(b)).count("1"))
+
+    def fold(x, y):
+        acc = 0.0
+        for p, q in zip(x.tolist(), y.tolist()):
+            acc = acc + ((p - q) * (p - q) if metric == "l2_sq" else p * q)
+        return acc
+
+    if metric == "l2_sq":
+        return fold(a, b)
+    den = math.sqrt(fold(a, a)) * math.sqrt(fold(b, b))
+    return 1.0 - (0.0 if den == 0 else fold(a, b) / den)
+
+
+def _join_rule_repair(ids, la, ds, di, dead_ids, data, metric, params):
+    """`delete_from_index`'s former join pipeline over one shard, in
+    plain Python: prune edges from or to deleted nodes; with a metric,
+    add the distinct forward bridges survivor → deleted → survivor
+    (src != dst), a stored edge winning over its duplicate bridge;
+    re-trim each (layer, src) to M_max by (dist, dst); sort a rewritten
+    node's edges by (layer, dist, dst). Survivors with no edge into the
+    deleted set keep their stored lists. Returns vec_id → [(layer, dst,
+    dist)]."""
+    pos = {v: i for i, v in enumerate(ids.tolist())}
+    dead = set(dead_ids)
+    out = {}
+    for i, v in enumerate(ids.tolist()):
+        if v in dead:
+            continue
+        stored = list(zip(la[i], ds[i], di[i]))
+        if not any(t in dead for _, t, _ in stored):
+            out[v] = stored
+            continue
+        kept = {(lay, t): d for lay, t, d in stored if t not in dead}
+        if metric is not None:
+            for lay, mid, _ in stored:
+                if mid not in dead:
+                    continue
+                for l2, t2 in zip(la[pos[mid]], ds[pos[mid]]):
+                    if l2 == lay and t2 not in dead and t2 != v and (lay, t2) not in kept:
+                        kept[(lay, t2)] = _fold_dist(metric, data[i], data[pos[t2]])
+        edges = sorted((lay, d, t) for (lay, t), d in kept.items())
+        if metric is not None:
+            cap = {lay: params.get_M_max(min(lay, 1)) for lay, _, _ in edges}
+            edges = [
+                e for lay in sorted(cap) for e in [x for x in edges if x[0] == lay][: cap[lay]]
+            ]
+        out[v] = [(lay, t, d) for lay, d, t in edges]
+    return out
+
+
+@pytest.mark.parametrize(
+    "kind, metric",
+    [("random", "l2_sq"), ("hamming", "hamming"), ("mixture", "cosine"), ("random", None)],
+)
+def test_delete_repair_matches_join_rule(kind, metric):
+    """`repair_deleted` over one shard's flat edge arrays gives exactly
+    the rows of the join rule it replaced (`_join_rule_repair`): the
+    same survivors, edge lists and bridge distances as Python floats —
+    the expression's fold order — and untouched survivors byte for
+    byte. The ids are a permutation, so (dist, dst) ties break by
+    global id, not by position; the cosine shard holds a zero vector."""
+    params = HawkParams.new(32, 16, 8)
+    n = 400
+    data = _shard_data(kind, n, seed=21)
+    if metric == "cosine":
+        data[7] = 0.0
+    build_metric = metric or "l2_sq"
+    ids = np.random.default_rng(22).permutation(5 * n)[:n].astype(np.int64)
+    built = K.build_local(ids, data, build_metric, params)
+    la, ds, di = K.adjacency_arrays(built, ids)
+    # stored distances one ulp above the fold's: a bridge duplicating a
+    # stored edge must keep the stored value
+    di = [np.nextafter(x, np.inf).tolist() for x in di]
+    dead_ids = ids[np.random.default_rng(23).random(n) < 0.15]
+
+    from hawk_pack_spark.operators.hnsw import _pair_dists
+
+    counts = np.array([len(x) for x in ds])
+    flat = [np.concatenate(x).astype(t) for x, t in ((la, np.int32), (ds, np.int64), (di, np.float64))]
+    score = None if metric is None else (lambda a, b: _pair_dists(data, a, b, metric))
+    live, cnt, e_layer, e_dst, e_dist = K.repair_deleted(
+        ids, counts, *flat, np.isin(ids, dead_ids), params, score
+    )
+    bounds = np.r_[0, np.cumsum(cnt)].tolist()
+    got = {
+        int(v): list(zip(e_layer[a:b].tolist(), e_dst[a:b].tolist(), e_dist[a:b].tolist()))
+        for v, a, b in zip(ids[live], bounds[:-1], bounds[1:])
+    }
+    want = _join_rule_repair(ids, la, ds, di, set(dead_ids.tolist()), data, metric, params)
+    assert got == want
+    stored = {(int(v), e) for i, v in enumerate(ids) for e in zip(la[i], ds[i], di[i])}
+    bridged = {(v, e) for v, es in got.items() for e in es} - stored
+    assert len(bridged) > 0 if metric is not None else not bridged

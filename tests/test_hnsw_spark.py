@@ -15,7 +15,12 @@ from hawk_pack_spark.config import HawkParams
 from hawk_pack_spark.operators import hnsw
 from hawk_pack_spark.operators.knn_exact import knn_exact
 from hawk_pack_spark.sources import load_table
-from spark_jobs import group_jobs_and_stage_tasks
+from spark_jobs import (
+    PYTHON_SCOPE,
+    group_jobs_and_stage_tasks,
+    group_stage_scopes,
+    run_in_group,
+)
 
 PARAMS = HawkParams.new(64, 32, 16)
 
@@ -255,6 +260,69 @@ def test_delete_from_index(spark):
         dels.select(F.col("vec_id")), "vec_id", "left_semi"
     ).count()
     assert overlap == 0
+
+
+def test_delete_runs_one_python_stage(spark, tmp_path):
+    """`delete_from_index` is ONE Python stage over the touched shards
+    (the per-shard repair kernel) plus JVM-side work, and takes no
+    checkpoint: over an index read from parquet (a lineage with no
+    Python and no checkpoint), the job group of the delete and the
+    collect of its result runs one stage with a Python operator and
+    none that reads or writes a checkpoint."""
+    params = HawkParams.new(32, 16, 8)
+    codes = spark.range(120).select(
+        F.col("id").alias("vec_id"), (F.col("id") * 7).alias("code")
+    )
+    path = str(tmp_path / "index")
+    hnsw.build_index(
+        codes, metric="hamming", params=params, num_shards=4, vec_col="code"
+    ).write.parquet(path)
+    index = spark.read.parquet(path)
+    dels = spark.range(0, 60, 7).select(F.col("id").alias("vec_id"))
+    sc = spark.sparkContext
+    rows = run_in_group(sc, "delete-stages", lambda: hnsw.delete_from_index(
+        index, dels, metric="hamming", params=params
+    ).collect())
+    assert len(rows) == 120 - 9
+    scopes = group_stage_scopes(sc, "delete-stages")
+    python = [s for s in scopes if any(PYTHON_SCOPE.search(n) for n in s)]
+    assert len(python) == 1, scopes
+    assert not any("checkpoint" in n for s in scopes for n in s), scopes
+
+
+def test_delete_bridge_keeps_stored_duplicate_edge(spark):
+    """A bridge that duplicates an edge its survivor already stores
+    keeps the STORED distance, at any input partitioning. On the line
+    0..5 (l2_sq), node 0 stores 0 → 2 one ulp above its fold distance
+    4.0; deleting 1 bridges 0 → 1 → 2 onto that same edge, so a
+    first-copy-wins dedup over a shuffle would keep either 4.0 or the
+    stored value depending on row order."""
+    from hawk_pack_spark.operators.hnsw import INDEX_SCHEMA
+
+    params = HawkParams.new(32, 16, 8)
+    stored = float(np.nextafter(4.0, np.inf))
+    adj = {0: [(1, 1.0), (2, stored)], 1: [(0, 1.0), (2, 1.0)],
+           2: [(1, 1.0), (3, 1.0)], 3: [(2, 1.0), (4, 1.0)],
+           4: [(3, 1.0), (5, 1.0)], 5: [(4, 1.0)]}
+    index = spark.createDataFrame(
+        [(0, v, 0, None, [float(v), 0.0], [0] * len(es), [t for t, _ in es],
+          [d for _, d in es]) for v, es in adj.items()],
+        INDEX_SCHEMA,
+    )
+    dels = spark.createDataFrame([(1,)], "vec_id long")
+
+    def rows(frame):
+        out = hnsw.delete_from_index(frame, dels, metric="l2_sq", params=params)
+        return sorted(
+            (r.vec_id, tuple(r.e_dst), tuple(r.e_dist)) for r in out.collect()
+        )
+
+    one = rows(index.coalesce(1))
+    assert one == rows(index.repartition(4))
+    got = {v: (dst, dist) for v, dst, dist in one}
+    assert got[0] == ((2,), (stored,))
+    assert got[2] == ((3, 0), (1.0, 4.0))  # the new bridge 2 → 0 is scored
+    assert got[3] == ((2, 4), (1.0, 1.0))  # no edge into 1: as stored
 
 
 def test_balance_assignments_splits_hot_cells(spark, sf_dir):

@@ -307,6 +307,16 @@ _DUP_CODES = [0, -1, 0x5A5A5A5A5A5A5A5A]
 _DUPS = 12
 
 
+def _dup_vectors(spark):
+    """(ids, vectors) of the duplicate corpus: ``_DUPS`` copies of each
+    of ``_DUP_POINTS``, under permuted ids."""
+    ids = np.random.default_rng(3).permutation(len(_DUP_POINTS) * _DUPS)
+    return ids, spark.createDataFrame(
+        [(int(v), _DUP_POINTS[j // _DUPS].tolist()) for j, v in enumerate(ids)],
+        "vec_id long, embedding array<double>",
+    )
+
+
 @pytest.fixture(
     scope="module",
     params=[
@@ -318,11 +328,7 @@ def quantized(request, spark):
     """(encoded, search(encoded, queries, k, **kw), ids, name) for each
     search on the scan skeleton — the quantized family and the exact
     scans — over the duplicate corpus."""
-    ids = np.random.default_rng(3).permutation(len(_DUP_POINTS) * _DUPS)
-    vecs = spark.createDataFrame(
-        [(int(v), _DUP_POINTS[j // _DUPS].tolist()) for j, v in enumerate(ids)],
-        "vec_id long, embedding array<double>",
-    )
+    ids, vecs = _dup_vectors(spark)
     name = request.param
     if name == "pq_search":
         cb = pq.pq_train(vecs, m=4, k=16, seed=7)
@@ -430,17 +436,77 @@ def test_partial_topk_breaks_ties_by_vec_id(spark, quantized):
         assert got == [(i + 1, int(v), 1.0) for i, v in enumerate(lowest)]
 
 
+def test_cosine_of_zero_vector_is_one_answer(spark):
+    """A zero vector has cosine sim 0 (dist 1) on every path: the numpy
+    scan `cosine_topk_numpy` and the expression scan `knn_exact` (ANSI
+    division on) return the same rows over the duplicate corpus, whose
+    first point is the origin — every row, so the origin's copies are
+    ranked, and for a query at the origin too (all sims 0, ties by
+    vec_id)."""
+    _, vecs = _dup_vectors(spark)
+    origin = spark.createDataFrame(
+        [(3, [0.0] * 8)], "query_id long, query_vec array<double>"
+    )
+    queries = _dup_queries(spark, 3).unionByName(origin)
+    n = len(_DUP_POINTS) * _DUPS
+    scan = sorted(
+        (r.query_id, r.rank, r.vec_id, r.sim)
+        for r in S.cosine_topk_numpy(vecs, queries, k=n).collect()
+    )
+    expr = sorted(
+        (r.query_id, r.rank, r.vec_id, 1.0 - r.dist)
+        for r in knn_exact(vecs, queries, k=n, metric="cosine").collect()
+    )
+    assert len(scan) == 4 * n
+    assert [r[:3] for r in scan] == [r[:3] for r in expr]
+    np.testing.assert_allclose(
+        [r[3] for r in scan], [r[3] for r in expr], rtol=0, atol=1e-12
+    )
+    assert all(r[3] == 0.0 for r in expr if r[0] == 3)
+
+
+def _gaussian_pq(spark, name):
+    """(encoded, search, queries) of ``name`` (flat PQ or IVF-PQ) on a
+    Gaussian corpus with 8-dim subspaces: non-integer codebooks, whose
+    LUT dot products round differently in different BLAS blockings."""
+    rng = np.random.default_rng(8)
+    pts = rng.normal(size=(300, 16))
+    vecs = spark.createDataFrame(
+        [(i, pts[i].tolist()) for i in range(len(pts))],
+        "vec_id long, embedding array<double>",
+    )
+    queries = spark.createDataFrame(
+        [(j, q.tolist()) for j, q in enumerate(rng.normal(size=(20, 16)))],
+        "query_id long, query_vec array<double>",
+    )
+    if name == "pq_search":
+        cb = pq.pq_train(vecs, m=2, k=16, seed=7)
+        return pq.pq_encode(vecs, cb), (
+            lambda e, q, k: pq.pq_search(e, cb, q, kth=k)
+        ), queries
+    enc, cents, cb = pq.ivfpq_build(vecs, n_clusters=3, m=2, k=16, seed=7)
+    return enc, (
+        lambda e, q, k: pq.ivfpq_search(e, cents, cb, q, kth=k, nprobe=3)
+    ), queries
+
+
 @pytest.mark.parametrize(
-    "quantized", ["l2_topk_numpy", "ivfsq8_search"], indirect=True
+    "quantized",
+    ["l2_topk_numpy", "ivfsq8_search", "pq_search", "ivfpq_search"],
+    indirect=True,
 )
 def test_tile_budget_keeps_rows(spark, quantized, monkeypatch):
     """The skeleton scores each (Arrow batch, cell) in query chunks
     under `pq._TILE_BYTES`; a budget that forces one query per chunk
-    returns exactly the rows of the default budget (an exact and a
-    quantized scorer; cosine's float sims may move by an ulp with the
-    matmul's shape)."""
-    enc, search, _, _ = quantized
+    returns exactly the rows of the default budget (an exact scorer, and
+    the SQ8 and PQ ADC scorers, whose distances depend on the (query,
+    row) pair alone; cosine's float sims may move by an ulp with the
+    matmul's shape). The PQ cases run on `_gaussian_pq`: the duplicate
+    corpus trains integer codebooks, exact in any summation order."""
+    enc, search, _, name = quantized
     queries = _dup_queries(spark, 3)
+    if name in ("pq_search", "ivfpq_search"):
+        enc, search, queries = _gaussian_pq(spark, name)
     want = _rows(search, enc, queries)
     monkeypatch.setattr(pq, "_TILE_BYTES", 1)
     assert _rows(search, enc, queries) == want
