@@ -162,9 +162,6 @@ def _build_shards(rows: DataFrame, num_shards: int, metric: str,
                   neighbor_heuristic: bool) -> DataFrame:
     """`_build_table` over every shard of ``rows``, one
     `groupBy().applyInArrow` group per shard."""
-    # explicit repartition: AQE's partition coalescing sees tiny shuffle
-    # bytes and would merge the CPU-heavy kernel groups into few tasks,
-    # serializing the build; user-specified partition counts are exempt
     # user-registered metrics live in driver module state; the kernel
     # runs in worker processes, so the registry rides the closure
     custom = dict(K.CUSTOM_BATCH)
@@ -173,6 +170,9 @@ def _build_shards(rows: DataFrame, num_shards: int, metric: str,
         K.CUSTOM_BATCH.update(custom)
         return _build_table(shard, metric, params, seed, neighbor_heuristic)
 
+    # explicit repartition: AQE's partition coalescing sees tiny shuffle
+    # bytes and would merge the CPU-heavy kernel groups into few tasks,
+    # serializing the build; user-specified partition counts are exempt
     return rows.repartition(num_shards, "shard").groupBy("shard").applyInArrow(
         build, INDEX_SCHEMA
     )
